@@ -32,7 +32,8 @@ the pipeline's bulk-sink `_id` upsert story (streaming/sinks.py).
 Wire format per record: one JSON line `{"key": ..., "value": ...}`;
 the reader surfaces `(partition int, offset long, key string,
 value string)` — the Kafka-shaped projection the rest of the pipeline
-(`plans/pipeline_batch.py` parse stage) consumes.
+(`plans/pipeline_batch.py` parse stage) consumes — as one Arrow record
+batch per slice, decoded by `pyarrow.json`.
 """
 
 from __future__ import annotations
@@ -40,6 +41,10 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.json as pj
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -115,6 +120,9 @@ class PartitionedLogWriter:
 # ---------------------------------------------------------------------------
 # Stream reader
 # ---------------------------------------------------------------------------
+
+_RECORD_SCHEMA = pa.schema([("key", pa.string()), ("value", pa.string())])
+
 
 @dataclass
 class _LogSlice(InputPartition):
@@ -221,16 +229,27 @@ class _PartitionedLogStreamReader(DataSourceStreamReader):
         return slices
 
     def read(self, partition: _LogSlice):
+        """One `pyarrow.RecordBatch` of the slice: the JSON lines are
+        decoded by `pyarrow.json` in one block, with the partition and
+        running offset columns alongside."""
         with open(partition.path, "rb") as f:
             f.seek(partition.start_byte)
             blob = f.read(partition.end_byte - partition.start_byte)
-        offset = partition.start_offset
-        for line in blob.decode("utf-8").splitlines():
-            if not line:
-                continue
-            rec = json.loads(line)
-            yield (partition.pid, offset, rec.get("key"), rec.get("value"))
-            offset += 1
+        recs = pj.read_json(
+            pa.BufferReader(blob),
+            read_options=pj.ReadOptions(use_threads=False,
+                                        block_size=len(blob) + 1),
+            parse_options=pj.ParseOptions(
+                explicit_schema=_RECORD_SCHEMA,
+                unexpected_field_behavior="ignore"))
+        n = recs.num_rows
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(np.full(n, partition.pid, dtype=np.int32)),
+             pa.array(np.arange(partition.start_offset,
+                                partition.start_offset + n, dtype=np.int64)),
+             recs.column("key").combine_chunks(),
+             recs.column("value").combine_chunks()],
+            names=["partition", "offset", "key", "value"])
 
     # -- ack ------------------------------------------------------------------
     def commit(self, end: dict) -> None:

@@ -71,22 +71,35 @@ def messages_from_events(events: DataFrame) -> DataFrame:
 
 # --- parsing (reference P2/P3/P5 semantics) ----------------------------
 
+def message_fields(value_col: str = "value") -> dict[str, Column]:
+    """The fixed-width carve-out as column expressions over `value_col`:
+    `valid` (the P2 length guard, :47-50), `module_name`, `send_ts_ms`
+    (NULL if garbage — engine policy is try_cast where the reference
+    would crash, SURVEY.md §7.4) and `payload`. Shared by
+    `parse_messages` and the pipeline's routing projection, so batch and
+    stream parse the same way."""
+    v = F.col(value_col)
+    return {
+        "valid": F.length(v) > MSG_HEADER_LEN,
+        "module_name": F.trim(F.substring(v, 1, MSG_MODULE_LEN)),
+        "send_ts_ms": F.trim(F.substring(v, MSG_MODULE_LEN + 1,
+                                         MSG_SEND_TIME_LEN))
+            .try_cast("long"),
+        "payload": F.expr(f"substring({value_col}, {MSG_MIN_VALID_LEN})"),
+    }
+
+
 def parse_messages(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """Parse the fixed-width layout into typed columns, dropping
     structurally-invalid records (length <= 64).
 
-    Columns out: module_name STRING, send_ts_ms LONG (NULL if garbage —
-    engine policy is try_cast where the reference would crash, SURVEY.md
-    §7.4), payload STRING, plus the original raw value.
+    Columns out: module_name STRING, send_ts_ms LONG, payload STRING,
+    plus the original raw value (see `message_fields`).
     """
-    v = F.col(value_col)
-    return (
-        raw.filter(F.length(v) > MSG_HEADER_LEN)  # P2 length guard (:47-50)
-        .select(
-            F.trim(F.substring(v, 1, MSG_MODULE_LEN)).alias("module_name"),
-            F.trim(F.substring(v, MSG_MODULE_LEN + 1, MSG_SEND_TIME_LEN))
-                .try_cast("long").alias("send_ts_ms"),
-            F.expr(f"substring({value_col}, {MSG_MIN_VALID_LEN})").alias("payload"),
-            v.alias("value"),
-        )
+    f = message_fields(value_col)
+    return raw.filter(f["valid"]).select(
+        f["module_name"].alias("module_name"),
+        f["send_ts_ms"].alias("send_ts_ms"),
+        f["payload"].alias("payload"),
+        F.col(value_col).alias("value"),
     )

@@ -1,5 +1,5 @@
-"""The reference topology, Spark-first: one enriched frame, three
-branches, single-pass multi-sink write.
+"""The reference topology, Spark-first: one routing projection, three
+outputs, one Spark job per micro-batch.
 
 Reference (DataStreamProcessingJob.java:41-66,149-173): a ProcessFunction
 emits every record to the main output, and for valid `session` messages
@@ -7,31 +7,46 @@ emits the payload tail to `session-output` and a derived latency
 (`now_ms - send_ts_ms`) to `zhiyan-output`; the three streams feed a
 passthrough, a CTSDB HTTP bulk sink, and a ZhiYan avg-metric sink.
 
-Spark has no side outputs (SURVEY.md §7.4): the idiom here is compute
-the parsed frame ONCE per micro-batch, `persist()` it inside
-`foreachBatch`, and derive the three branches as filtered projections —
-same single-pass guarantee as the reference's ProcessFunction, with
-Structured Streaming's checkpoint/WAL replacing checkpoint-coupled acks
+Spark has no side outputs (SURVEY.md §7.4). `route` is the
+ProcessFunction as one projection: every record keeps its `value`, and
+`payload` / `delay_ms` are filled only where the reference would emit
+to the side outputs. The streaming job runs that projection through a
+single `mapInArrow(...).collect()` per micro-batch: each partition
+writes its main parquet file, posts its bulk docs and returns its delay
+count and sum (`sinks.PartitionSink`), and the driver reports the
+batch's average. That is the reference's single pass, with Structured
+Streaming's checkpoint/WAL replacing checkpoint-coupled acks
 (at-least-once end-to-end, matching the reference's real guarantee —
-SURVEY.md §3.3).
+SURVEY.md §3.3); every output is keyed by batch id, so a replay
+overwrites instead of duplicating.
 
-Scale notes: the branches are narrow projections of one scan — no
-shuffle anywhere in the hot path; sinks batch per partition (the
-reference's count-or-time buffering maps to micro-batch cadence +
-per-request size caps in the writers).
+`split_branches` derives the three outputs as separate frames from the
+same `route`, for the batch queries (plans/pipeline_batch.py) that
+check the routing against DuckDB.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
 from dataclasses import dataclass
+
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..schemas import SESSION_MODULE
-from .messages import parse_messages
-from .sinks import HttpBulkWriter, MetricAvgReporter
+from .messages import message_fields
+from .sinks import (
+    HttpBulkWriter,
+    MetricAvgReporter,
+    PartitionSink,
+    task_partition_id,
+)
+
+_SINK_RESULT = "delay_n long, delay_sum long, docs long"
 
 
 @dataclass(frozen=True)
@@ -42,8 +57,11 @@ class Branches:
     delays: DataFrame          # derived latency of session messages (:58-63)
 
 
-def split_branches(raw: DataFrame, now_ms: Column | None = None) -> Branches:
-    """Single logical pass: parse once, branch by projection.
+def route(raw: DataFrame, now_ms: Column | None = None) -> DataFrame:
+    """Every record, with the side outputs as nullable columns: `value`,
+    `payload` (valid session records, P2+P4, :47-57), `send_ts_ms` and
+    `delay_ms` (valid session records with a parseable send time,
+    P5+P6, :58-63).
 
     `now_ms` injects a frozen processing-time for deterministic tests;
     production uses the wall clock exactly like the reference
@@ -51,14 +69,26 @@ def split_branches(raw: DataFrame, now_ms: Column | None = None) -> Branches:
     """
     if now_ms is None:
         now_ms = F.unix_millis(F.current_timestamp())
-    parsed = parse_messages(raw)
-    session = parsed.filter(F.col("module_name") == SESSION_MODULE)  # P4 (:55)
-    tails = session.select("payload")
-    delays = session.filter(F.col("send_ts_ms").isNotNull()).select(
-        F.col("send_ts_ms"),
-        (now_ms - F.col("send_ts_ms")).alias("delay_ms"),            # P6 (:58-61)
+    f = message_fields()
+    session = f["valid"] & (f["module_name"] == SESSION_MODULE)
+    send_ts = F.when(session, f["send_ts_ms"])
+    return raw.select(
+        "value",
+        F.when(session, f["payload"]).alias("payload"),
+        send_ts.alias("send_ts_ms"),
+        (now_ms - send_ts).alias("delay_ms"),
     )
-    return Branches(main=raw.select("value"), session_tails=tails, delays=delays)
+
+
+def split_branches(raw: DataFrame, now_ms: Column | None = None) -> Branches:
+    """The three outputs as frames, filtered from one `route`."""
+    r = route(raw, now_ms)
+    return Branches(
+        main=r.select("value"),
+        session_tails=r.filter(F.col("payload").isNotNull()).select("payload"),
+        delays=r.filter(F.col("send_ts_ms").isNotNull())
+        .select("send_ts_ms", "delay_ms"),
+    )
 
 
 def run_pipeline_stream(
@@ -71,22 +101,34 @@ def run_pipeline_stream(
     trigger: dict | None = None,
     name: str = "datastream-pipeline",
 ) -> StreamingQuery:
-    """Wire the streaming job: one foreachBatch doing all three writes.
+    """Wire the streaming job: one Spark job per micro-batch.
 
-    The micro-batch is persisted so the source is read once per trigger
-    (the reference's single-pass guarantee); `batch_id` gives sinks an
-    idempotency handle (SURVEY.md §3.3: replayed batch => same id).
+    Main files are named `part-<query>-<batch_id>-<pid>.parquet`, flat
+    in `main_out_dir` (a local path). `<query>` is a hash of the
+    checkpoint path, so queries sharing `main_out_dir` (each starts at
+    batch 0) never overwrite each other's files, while a replay of a
+    batch (SURVEY.md §3.3: replayed batch => same id) overwrites its
+    own.
     """
+    query_key = hashlib.sha1(
+        os.path.abspath(checkpoint_dir).encode("utf-8")).hexdigest()[:12]
 
     def write_all(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            b = split_branches(batch_df, now_ms=now_ms)
-            b.main.write.mode("append").parquet(main_out_dir)
-            bulk_writer.write_batch(b.session_tails, batch_id)
-            metric_reporter.report_batch(b.delays, batch_id)
-        finally:
-            batch_df.unpersist()
+        sink = PartitionSink(main_out_dir, f"part-{query_key}-{batch_id}",
+                             bulk_writer.poster(batch_id))
+
+        def write_partition(batches):
+            n, total, docs = sink.write(batches, task_partition_id())
+            yield pa.RecordBatch.from_pydict(
+                {"delay_n": [n], "delay_sum": [total], "docs": [docs]})
+
+        rows = (route(batch_df, now_ms)
+                .select("value", "payload", "delay_ms")
+                .mapInArrow(write_partition, _SINK_RESULT)
+                .collect())
+        n = sum(r["delay_n"] for r in rows)
+        total = sum(r["delay_sum"] for r in rows)
+        metric_reporter.report_batch((n, total / n if n else None), batch_id)
 
     writer = (
         raw_stream.writeStream.foreachBatch(write_all)

@@ -1,5 +1,8 @@
-"""Batched sinks: HTTP bulk writer (CTSDB analogue) and avg-metric
-reporter (ZhiYan analogue).
+"""Per-partition sinks of the pipeline (streaming/pipeline.py): main
+parquet file, HTTP bulk docs (CTSDB analogue) and the delay metric's
+count and sum (ZhiYan analogue), all written in ONE Arrow pass over a
+micro-batch partition (`PartitionSink.write`), plus the driver-side
+metric reporter.
 
 Reference behaviors reproduced:
 - CTSDBSink.java: buffered batch POST of concatenated records to
@@ -9,31 +12,44 @@ Reference behaviors reproduced:
   reference (`// todo throw exception`, :165,170); here a failed post
   RAISES so Structured Streaming retries the micro-batch — upgrading
   silently-lossy to at-least-once.
-- ZhiYanSink.java: per-batch avg of the delay metric (:100-115).
+- ZhiYanSink.java: per-batch avg of the delay metric (:100-115): each
+  partition returns its delay count and sum, the driver combines them
+  and `MetricAvgReporter` writes `metric-{batch_id}.json`.
 
-Transport is injectable: an `http(s)://` endpoint posts via a
-per-executor-process keep-alive connection cache; a filesystem path
-spools request bodies to files (used by tests; also a reasonable
-dead-letter pattern). The bulk body is assembled and posted
-per-partition via `foreachPartition` — the data path never touches the
+Every output is idempotent under a WAL replay of a failed micro-batch,
+which re-reads the same source offsets, so partition contents and
+order recur:
+- main rows go to `part-<query>-<batch_id>-<pid>.parquet`, written
+  under a dot-prefixed temp name and moved into place with
+  `os.replace`, so a replay overwrites the file instead of appending;
+- bulk doc ids are `{batch_id}-{pid}-{ordinal}`, so a replay rewrites
+  the same ids at an `_id`-keyed store;
+- the metric file is keyed by batch id.
+
+Bulk transport is injectable: an `http(s)://` endpoint posts through a
+per-process keep-alive connection that lives for one task's posts; a
+filesystem path spools request bodies to files (used by tests; also a
+reasonable dead-letter pattern). The data path never touches the
 driver, matching the reference's parallel sink subtasks
 (CTSDBSink.java:118-183 at sink_parallelism,
-DataStreamProcessingJob.java:167). Doc ids are
-`(batch_id, partition_id, ordinal)`: a WAL replay of a failed
-micro-batch re-reads the same source files, so partition contents and
-order recur and replays rewrite the same ids instead of duplicating.
+DataStreamProcessingJob.java:167).
 """
 
 from __future__ import annotations
 
+import glob
 import http.client
 import json
 import os
 import time
+from dataclasses import dataclass
+from typing import Iterable, Iterator
 from urllib.parse import urlparse
 
+import pyarrow as pa
+import pyarrow.compute as pc
+
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _BULK_DROP_LITERAL = "error"  # CTSDBSink.java:120-123
 
@@ -65,8 +81,8 @@ def _post_pooled(endpoint: str, body: str, timeout_s: float = 5.0,
     last_err: str | Exception | None = None
     # One FREE immediate reconnect per call, outside the backoff budget
     # — but only when a POOLED connection existed to go stale (server
-    # closed the idle keep-alive between micro-batches, the common
-    # benign case; it must not sleep, and must survive retry_attempts=1,
+    # closed the keep-alive between two chunks of a task, a benign
+    # case; it must not sleep, and must survive retry_attempts=1,
     # which disables only the HTTP-level retain-retry). A fresh
     # connection that fails outright gets no freebie: a hard-down
     # endpoint should consume the budget, not double-hammer.
@@ -81,8 +97,8 @@ def _post_pooled(endpoint: str, body: str, timeout_s: float = 5.0,
             _CONN_CACHE[key] = conn
         # The cached connection was built with the FIRST caller's
         # timeout; honor this call's value on the live socket too. Cached
-        # connections live until the executor worker exits (keep-alive is
-        # the point); the OS reaps them with the process.
+        # connections live until the task's posts finish
+        # (`_close_pooled`), so chunks of one partition share a socket.
         conn.timeout = timeout_s
         if conn.sock is not None:
             conn.sock.settimeout(timeout_s)
@@ -130,6 +146,88 @@ def _post_pooled(endpoint: str, body: str, timeout_s: float = 5.0,
         f"bulk post failed after {max(1, retry_attempts)} attempts: {last_err}")
 
 
+def _close_pooled(endpoint: str) -> None:
+    """Close this process's pooled connection to `endpoint`, if any.
+
+    Module-level on purpose: a function shipped to executors by value
+    would carry its own copy of `_CONN_CACHE` and close nothing."""
+    u = urlparse(endpoint)
+    conn = _CONN_CACHE.pop((u.scheme, u.netloc), None)
+    if conn is not None:
+        conn.close()
+
+
+def task_partition_id() -> int:
+    """The running Spark task's partition id (0 outside a task)."""
+    from pyspark import TaskContext
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx is not None else 0
+
+
+@dataclass(frozen=True)
+class BulkPoster:
+    """The executor side of `HttpBulkWriter` for one micro-batch: plain
+    values only, so it pickles into the task."""
+    endpoint: str
+    batch_id: int
+    batch_size: int
+    retry_attempts: int
+    backoff_s: float
+    auth_header: str | None
+
+    @property
+    def is_http(self) -> bool:
+        return self.endpoint.startswith(("http://", "https://"))
+
+    def post(self, payloads: Iterable[pa.Array], pid: int) -> int:
+        """Post one partition's session payloads (nulls and the literal
+        'error' skipped) as `batch_size`-doc chunks; returns docs posted.
+        Doc ids are `{batch_id}-{pid}-{ordinal}`, the ordinal counting
+        posted docs in partition order."""
+        buf: list[str] = []
+        chunk_no = 0
+        ordinal = 0
+
+        def flush() -> None:
+            nonlocal chunk_no
+            body = "\n".join(buf) + "\n"
+            if self.is_http:
+                _post_pooled(self.endpoint, body,
+                             retry_attempts=self.retry_attempts,
+                             backoff_s=self.backoff_s,
+                             auth_header=self.auth_header)
+            else:
+                # os.replace: a replayed batch overwrites its own chunk
+                # file atomically instead of appending a duplicate.
+                path = os.path.join(
+                    self.endpoint,
+                    f"bulk-{self.batch_id}-{pid}-{chunk_no}.ndjson")
+                tmp = f"{path}.tmp-{os.getpid()}"
+                with open(tmp, "w", encoding="utf-8") as f:
+                    f.write(body)
+                os.replace(tmp, path)
+            buf.clear()
+            chunk_no += 1
+
+        try:
+            for arr in payloads:
+                for doc in arr.to_pylist():
+                    if doc is None or doc == _BULK_DROP_LITERAL:
+                        continue
+                    buf.append(json.dumps(
+                        {"_id": f"{self.batch_id}-{pid}-{ordinal}",
+                         "doc": doc}))
+                    ordinal += 1
+                    if len(buf) >= self.batch_size:
+                        flush()
+            if buf:
+                flush()
+        finally:
+            if self.is_http:
+                _close_pooled(self.endpoint)
+        return ordinal
+
+
 class HttpBulkWriter:
     """Batched bulk writer with count-capped requests (A1/K1 analogue).
 
@@ -146,7 +244,7 @@ class HttpBulkWriter:
         # HTTP Basic auth (reference CTSDBSink.java builds the client
         # with ctsdb_user/ctsdb_passwd credentials on the _bulk POST;
         # config surface SURVEY.md §2.1). Precomputed driver-side: the
-        # header is a plain string closure the executors reuse.
+        # header is a plain string the executors reuse.
         if user is not None:
             import base64
             token = base64.b64encode(
@@ -159,91 +257,106 @@ class HttpBulkWriter:
         # retry_attempts=1 disables and falls straight to WAL replay.
         self.retry_attempts = retry_attempts
         self.backoff_s = backoff_s
-        self._is_http = endpoint.startswith(("http://", "https://"))
 
-    def write_batch(self, tails: DataFrame, batch_id: int) -> None:
-        # Close over plain values only — this function ships to executors.
-        endpoint, batch_size, is_http = \
-            self.endpoint, self.batch_size, self._is_http
-        retry_attempts, backoff_s = self.retry_attempts, self.backoff_s
-        auth_header = self.auth_header
-        if not is_http:
-            os.makedirs(endpoint, exist_ok=True)
+    def poster(self, batch_id: int) -> BulkPoster:
+        """Driver side, once per micro-batch: the poster its tasks run."""
+        poster = BulkPoster(self.endpoint, batch_id, self.batch_size,
+                            self.retry_attempts, self.backoff_s,
+                            self.auth_header)
+        if not poster.is_http:
+            os.makedirs(self.endpoint, exist_ok=True)
             # A replay of this batch may partition differently than the
             # failed attempt (e.g. shuffle-partitions changed across
             # restarts), which would leave the first attempt's chunk
             # files for partition/chunk ids the replay never rewrites —
             # duplicated docs downstream. Clear the batch's spool files
-            # driver-side before the executors write (ADVICE r2). The
-            # HTTP path gets the same guarantee from _id-keyed upserts
-            # only when partitioning is deterministic across attempts —
-            # true for WAL file-replay (same files, same splits), which
-            # is the supported replay mode.
-            # the trailing * also catches .ndjson.tmp-{pid} orphans from
-            # an attempt that died between open() and os.replace()
-            import glob as _glob
-            for stale in _glob.glob(
-                    os.path.join(endpoint, f"bulk-{batch_id}-*.ndjson*")):
+            # before the executors write. The HTTP path gets the same
+            # guarantee from _id-keyed upserts only when partitioning is
+            # deterministic across attempts — true for WAL replay (same
+            # offsets, same splits), which is the supported replay mode.
+            # The trailing * also catches .ndjson.tmp-{pid} orphans from
+            # an attempt that died between open() and os.replace().
+            for stale in glob.glob(os.path.join(
+                    self.endpoint, f"bulk-{batch_id}-*.ndjson*")):
                 os.remove(stale)
+        return poster
 
-        def post_partition(rows) -> None:
-            from pyspark import TaskContext
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx is not None else 0
-            buf: list[str] = []
-            chunk_no = 0
+    def write_batch(self, tails: DataFrame, batch_id: int) -> int:
+        """Post a frame's `payload` column on its own; returns docs
+        posted. The pipeline posts inside its fused pass instead
+        (`PartitionSink`); both run `BulkPoster.post`."""
+        poster = self.poster(batch_id)
 
-            def flush() -> None:
-                nonlocal chunk_no
-                if not buf:
-                    return
-                body = "\n".join(buf) + "\n"
-                if is_http:
-                    _post_pooled(endpoint, body,
-                                 retry_attempts=retry_attempts,
-                                 backoff_s=backoff_s,
-                                 auth_header=auth_header)
-                else:
-                    # os.replace: a replayed batch overwrites its own chunk
-                    # file atomically instead of appending a duplicate.
-                    path = os.path.join(
-                        endpoint, f"bulk-{batch_id}-{pid}-{chunk_no}.ndjson")
-                    tmp = f"{path}.tmp-{os.getpid()}"
-                    with open(tmp, "w", encoding="utf-8") as f:
-                        f.write(body)
-                    os.replace(tmp, path)
-                buf.clear()
-                chunk_no += 1
+        def post(batches: Iterator[pa.RecordBatch]):
+            docs = poster.post((b.column(0) for b in batches),
+                               task_partition_id())
+            yield pa.RecordBatch.from_pydict({"docs": [docs]})
 
-            for ordinal, row in enumerate(rows):
-                buf.append(json.dumps(
-                    {"_id": f"{batch_id}-{pid}-{ordinal}",
-                     "doc": row["payload"]}))
-                if len(buf) >= batch_size:
-                    flush()
-            flush()
+        rows = tails.select("payload").mapInArrow(post, "docs long").collect()
+        return sum(r["docs"] for r in rows)
 
-        tails.filter(F.col("payload") != _BULK_DROP_LITERAL) \
-            .select("payload").foreachPartition(post_partition)
+
+@dataclass(frozen=True)
+class PartitionSink:
+    """One micro-batch's outputs, written per partition in one pass over
+    Arrow batches of `value`, `payload` (NULL unless a valid session
+    record) and `delay_ms` (NULL where there is no delay)."""
+    main_dir: str
+    main_prefix: str  # part-<query>-<batch_id>
+    bulk: BulkPoster
+
+    def write(self, batches: Iterable[pa.RecordBatch],
+              pid: int) -> tuple[int, int, int]:
+        """Write the main file, post the bulk docs; returns
+        (delay count, delay sum, docs posted)."""
+        import pyarrow.parquet as pq
+
+        path = os.path.join(self.main_dir, f"{self.main_prefix}-{pid}.parquet")
+        tmp = os.path.join(self.main_dir, f".{os.path.basename(path)}.tmp")
+        writer = None
+        n_delay = sum_delay = 0
+
+        def payloads() -> Iterator[pa.Array]:
+            nonlocal writer, n_delay, sum_delay
+            for b in batches:
+                if b.num_rows == 0:
+                    continue
+                main = b.select(["value"])
+                if writer is None:
+                    os.makedirs(self.main_dir, exist_ok=True)
+                    writer = pq.ParquetWriter(tmp, main.schema)
+                writer.write_batch(main)
+                delay = b.column("delay_ms")
+                n_delay += len(delay) - delay.null_count
+                sum_delay += pc.sum(delay).as_py() or 0
+                yield b.column("payload")
+
+        try:
+            docs = self.bulk.post(payloads(), pid)
+        finally:
+            if writer is not None:
+                writer.close()
+        if writer is not None:
+            os.replace(tmp, path)
+        return n_delay, sum_delay, docs
 
 
 class MetricAvgReporter:
     """Per-batch avg of delay_ms (ZhiYan A2 analogue), spooled as JSON
-    lines `{batch_id, n, avg_delay_ms, reported_at}`."""
+    `{batch_id, n, avg_delay_ms, reported_at}` to `metric-{batch_id}.json`."""
 
     def __init__(self, spool_dir: str) -> None:
         self.spool_dir = spool_dir
 
-    def report_batch(self, delays: DataFrame, batch_id: int) -> None:
-        row = delays.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg("delay_ms").alias("avg_delay_ms"),
-        ).collect()[0]
-        if row["n"] == 0:
+    def report_batch(self, stats: tuple[int, float | None],
+                     batch_id: int) -> None:
+        """`stats` is the batch's (delay count, average delay in ms);
+        a batch without delays reports nothing."""
+        n, avg = stats
+        if n == 0:
             return
         os.makedirs(self.spool_dir, exist_ok=True)
-        rec = {"batch_id": batch_id, "n": row["n"],
-               "avg_delay_ms": row["avg_delay_ms"],
+        rec = {"batch_id": batch_id, "n": n, "avg_delay_ms": avg,
                "reported_at": time.time()}
         path = os.path.join(self.spool_dir, f"metric-{batch_id}.json")
         with open(path, "w", encoding="utf-8") as f:

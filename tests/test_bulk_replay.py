@@ -10,8 +10,9 @@ re-posted docs overwrite themselves instead of duplicating.
 
 The endpoint here is a real local HTTP server that fails the first
 bulk request with a 503 and accepts everything after — exercising the
-executor-side `foreachPartition` post path end-to-end (driver never
-touches payloads).
+executor-side Arrow post path end-to-end (driver never touches
+payloads). After a replay the main parquet rows and the metric files
+must also be there exactly once.
 """
 
 from __future__ import annotations
@@ -75,11 +76,34 @@ def _start_bulk_server(fail_first_n: int = 1):
     return srv, state
 
 
-def _write_messages(values: list[str], out_dir: str) -> None:
+def _write_messages(values: list[str], out_dir: str,
+                    n_files: int = 1) -> None:
+    """One parquet file per stream partition, so a batch of `n_files`
+    files runs `n_files` tasks."""
     os.makedirs(out_dir, exist_ok=True)
-    table = pa.Table.from_pandas(pd.DataFrame({"value": values}),
-                                 preserve_index=False)
-    pq.write_table(table, os.path.join(out_dir, "chunk-000000.parquet"))
+    step = -(-len(values) // n_files)
+    for i in range(n_files):
+        table = pa.Table.from_pandas(
+            pd.DataFrame({"value": values[i * step:(i + 1) * step]}),
+            preserve_index=False)
+        pq.write_table(table, os.path.join(out_dir, f"chunk-{i:06d}.parquet"))
+
+
+def _assert_main_and_metric_once(root: str, n_msgs: int) -> None:
+    """Main rows and metric records each exactly once after a replay:
+    every message is one main row, and each batch has one metric file
+    whose `n` counts its messages once."""
+    import glob
+
+    main = glob.glob(os.path.join(root, "main", "*.parquet"))
+    assert sum(pq.read_metadata(f).num_rows for f in main) == n_msgs
+    metrics = []
+    for path in glob.glob(os.path.join(root, "metric", "metric-*.json")):
+        with open(path, encoding="utf-8") as f:
+            metrics.append(json.load(f))
+    batch_ids = [m["batch_id"] for m in metrics]
+    assert len(batch_ids) == len(set(batch_ids)) >= 1
+    assert sum(m["n"] for m in metrics) == n_msgs
 
 
 def test_failed_bulk_post_replays_to_exactly_once_effective(spark, tmp_path):
@@ -88,7 +112,9 @@ def test_failed_bulk_post_replays_to_exactly_once_effective(spark, tmp_path):
     values = [f"{'session':<16}{'1700000000000':<16}" + " " * 32 + p
               for p in payloads]
     src_dir = str(tmp_path / "msgs")
-    _write_messages(values, src_dir)
+    # two partitions: while one task's first POST gets the 503, the
+    # other can finish and publish its main file before the restart
+    _write_messages(values, src_dir, n_files=2)
 
     srv, state = _start_bulk_server(fail_first_n=1)
     endpoint = f"http://127.0.0.1:{srv.server_address[1]}/bulk"
@@ -126,6 +152,9 @@ def test_failed_bulk_post_replays_to_exactly_once_effective(spark, tmp_path):
         assert state["n_posts"] > 1
         # Ids carry (batch_id, partition_id, ordinal) — all unique.
         assert all(len(i.split("-")) == 3 for i in state["docs"])
+        # The main file and the metric were written by both attempts
+        # too; the replay overwrote them instead of adding to them.
+        _assert_main_and_metric_once(str(tmp_path), n_msgs)
     finally:
         srv.shutdown()
 
@@ -261,6 +290,99 @@ def _start_scheduled_server(fail_ordinals: set[int]):
     return srv, state
 
 
+def _start_counting_server():
+    """Keep-alive bulk endpoint that tracks its concurrently open
+    connections (HTTP/1.1: a connection stays open until the client
+    closes it)."""
+    state = {"active": 0, "max_active": 0, "opened": 0, "docs": set()}
+    lock = threading.Lock()
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1"
+
+        def setup(self):
+            super().setup()
+            with lock:
+                state["active"] += 1
+                state["opened"] += 1
+                state["max_active"] = max(state["max_active"],
+                                          state["active"])
+
+        def finish(self):
+            try:
+                super().finish()
+            finally:
+                with lock:
+                    state["active"] -= 1
+
+        def do_POST(self):  # noqa: N802 — http.server API
+            n = int(self.headers.get("Content-Length", 0))
+            body = self.rfile.read(n).decode("utf-8")
+            with lock:
+                state["docs"].update(json.loads(line)["doc"]
+                                     for line in body.splitlines() if line)
+            self.send_response(200)
+            self.send_header("Content-Length", "0")
+            self.end_headers()
+
+        def log_message(self, *args):
+            pass
+
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv, state
+
+
+def test_bulk_connections_close_with_their_task(spark, tmp_path):
+    """Each task closes its bulk connection when its posts finish, so
+    over several micro-batches the endpoint never holds more open
+    connections than there are task slots, and none stay open after
+    the query ends. Two queries share one main directory, each starting
+    at batch 0, and neither overwrites the other's main files."""
+    import glob
+    import time
+
+    slots = spark.sparkContext.defaultParallelism
+    src_dir = tmp_path / "msgs"
+    src_dir.mkdir()
+    payloads = []
+    for i in range(3 * slots):
+        chunk = [f'{{"f": {i}, "k": {k}}}' for k in range(20)]
+        payloads += chunk
+        pq.write_table(pa.table({"value": [
+            f"{'session':<16}{'1700000000000':<16}" + " " * 32 + p
+            for p in chunk]}), str(src_dir / f"chunk-{i:06d}.parquet"))
+
+    srv, state = _start_counting_server()
+    endpoint = f"http://127.0.0.1:{srv.server_address[1]}/bulk"
+    try:
+        for tag in ("a", "b"):
+            src = (spark.readStream.schema("value string")
+                   .option("maxFilesPerTrigger", slots).parquet(str(src_dir)))
+            q = run_pipeline_stream(
+                src, checkpoint_dir=str(tmp_path / f"ckpt-{tag}"),
+                main_out_dir=str(tmp_path / "main"),
+                bulk_writer=HttpBulkWriter(endpoint, batch_size=8),
+                metric_reporter=MetricAvgReporter(
+                    str(tmp_path / f"metric-{tag}")),
+                now_ms=F.lit(1700000001000))
+            q.awaitTermination(timeout=180)
+            assert sum(p["numInputRows"] > 0 for p in q.recentProgress) >= 3
+        deadline = time.time() + 10
+        while state["active"] and time.time() < deadline:
+            time.sleep(0.05)
+    finally:
+        srv.shutdown()
+
+    assert state["docs"] == set(payloads)
+    assert state["opened"] > 0
+    assert state["max_active"] <= slots, state
+    assert state["active"] == 0, "a bulk connection outlived its task"
+    main = glob.glob(str(tmp_path / "main" / "*.parquet"))
+    assert sum(pq.read_metadata(f).num_rows for f in main) == \
+        2 * len(payloads)
+
+
 from hypothesis import HealthCheck, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
@@ -291,7 +413,7 @@ def test_random_outage_schedule_is_effectively_exactly_once(
     values = [f"{'session':<16}{'1700000000000':<16}" + " " * 32 + p
               for p in payloads]
     src_dir = os.path.join(root, "msgs")
-    _write_messages(values, src_dir)
+    _write_messages(values, src_dir, n_files=2)
     srv, state = _start_scheduled_server(fail_ordinals)
     endpoint = f"http://127.0.0.1:{srv.server_address[1]}/bulk"
     try:
@@ -321,6 +443,7 @@ def test_random_outage_schedule_is_effectively_exactly_once(
         for failed in state["failed_bodies"]:
             assert failed in state["ok_bodies"], (
                 "failed chunk never landed")
+        _assert_main_and_metric_once(root, n_msgs)
     finally:
         srv.shutdown()
         _shutil.rmtree(root, ignore_errors=True)

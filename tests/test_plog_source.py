@@ -25,6 +25,11 @@ def _register(spark):
     spark.dataSource.register(PartitionedLogDataSource)
 
 
+def _tuples(batches) -> list[tuple]:
+    """Flatten the Arrow record batches `read()` yields to row tuples."""
+    return [tuple(row.values()) for b in batches for row in b.to_pylist()]
+
+
 def _read_sink(spark, out_dir: str) -> list:
     return (spark.read.parquet(out_dir)
             .select("partition", "offset", "key", "value").collect())
@@ -110,7 +115,7 @@ def test_plog_parallelism_matches_partitions(spark, tmp_path):
     mid, end2 = end, r.latestOffset()
     tail = r.partitions(mid, end2)
     assert len(tail) == 1 and tail[0].pid == 1
-    recs = list(r.read(tail[0]))
+    recs = _tuples(r.read(tail[0]))
     assert recs == [(1, 3, "p1", "late")]
 
 
@@ -131,7 +136,7 @@ def test_plog_torn_tail_invisible_until_hwm(tmp_path):
         f.write(b'{"key": "torn", "val')
     assert r.latestOffset() == hwm_before
     slices = r.partitions(r.initialOffset(), r.latestOffset())
-    recs = [rec for s in slices for rec in r.read(s)]
+    recs = [rec for s in slices for rec in _tuples(r.read(s))]
     assert recs == [(0, 0, "k", "v0")]
 
 

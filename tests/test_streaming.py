@@ -476,6 +476,9 @@ def test_failed_metric_report_replays_same_metric_file(spark, tmp_path):
     assert rec["batch_id"] == 0
     assert rec["n"] == n_msgs
     assert rec["avg_delay_ms"] == 1000.0
+    # the failed attempt had already written the main file; the replay
+    # overwrote it
+    assert spark.read.parquet(str(tmp_path / "main")).count() == n_msgs
 
 
 def test_live_late_drop_fixture_nonvacuous(spark, sf_dir):
