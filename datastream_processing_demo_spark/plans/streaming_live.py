@@ -13,7 +13,7 @@ bit for bit (exact integer-cents sums; window() is 1970-epoch-aligned,
 SURVEY.md §2.2 "exact via replayed batch").
 
 At scale the same topology is the production shape: log-offset source,
-watermark bounding state, RocksDB state store (session.py), sink
+watermark bounding state, the state store session.py documents, sink
 swapped for parquet/foreachBatch. The memory sink is test-only.
 """
 

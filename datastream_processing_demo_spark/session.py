@@ -15,11 +15,24 @@ Scale notes (100 TB design point):
   would be sized so ~128 MB/partition post-shuffle (AQE coalesces down).
 - maxPartitionBytes 128 MB keeps scan tasks balanced against 100 TB of
   parquet (~800k input splits on a 1000-executor cluster).
+
+State store: stateful queries (streaming/windows.py, stateful.py) run on
+Spark's default HDFS-backed store. On perfbench's `state_batch` drain it
+used about 30% less CPU than RocksDB, a gap that grew with state size,
+but it keeps state on the JVM heap: about 315 B per state row (98 MB at
+311k rows), held in the ~40% of the heap that Spark's unified memory
+leaves to user objects. RocksDB, off-heap, is the better choice from
+about 20M state rows with the default 16g heap, or 2M with perfbench's
+2g heap. To switch, set spark.sql.streaming.stateStore.providerClass to
+org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
+in `EngineConfig.extra_conf` or SPARK_GRAFT_EXTRA_CONF. A checkpoint
+keeps the provider it was started with across restarts.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -46,6 +59,16 @@ def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _export_package_path() -> None:
+    """Put this package's parent directory on PYTHONPATH, which the JVM
+    and its local-mode Python workers inherit when the JVM starts: the
+    workers unpickle the `plog` source by module path."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root] + paths)
+
+
 def get_session(config: EngineConfig | None = None) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
@@ -55,42 +78,17 @@ def get_session(config: EngineConfig | None = None) -> SparkSession:
     cfg = config or EngineConfig()
     cpus = _cpus()
     master = cfg.master or f"local[{cpus}]"
-    # 2x cores, measured as the right LOCAL granularity trade (r12-opt):
-    # 1x cores cut the 8 heaviest lanes ~26% (less task-slot
-    # oversubscription on CPU-bound tiny-shuffle stages) but cost the
-    # many short lanes ~15-40% each — with tasks == slots one stolen
-    # vCPU stalls a whole stage, while 2x tasks let the scheduler fill
-    # the gaps — and the full suite came out a wash. Kept at 2x so
-    # per-query medians stay comparable across rounds; on a real
-    # cluster `parallelism` / SPARK_GRAFT_EXTRA_CONF size this by data
-    # (~128 MB-1 GB post-shuffle, guide §2.2) and AQE coalesces.
+    # 2x cores locally: with tasks == slots one stolen vCPU stalls a
+    # whole stage. On a cluster, `parallelism` / SPARK_GRAFT_EXTRA_CONF
+    # size this by data (~128 MB-1 GB post-shuffle) and AQE coalesces.
     shuffle_parts = cfg.parallelism or max(2 * cpus, 8)
-    # spark.default.parallelism is deliberately NOT set (r13-opt): left
-    # alone it equals the task-SLOT count (local[n] -> n; on a cluster,
-    # total executor cores), which is what its two SQL-side consumers
-    # actually want, and what the r12 global-knob experiment could not
-    # deliver per-lane:
-    #  - spread() widens CPU-bound per-row stages to defaultParallelism;
-    #    tasks == slots beats the old 2x-cpus oversubscription on those
-    #    uniform CPU-heavy stages (guide §2.2 "fewer, larger tasks"),
-    #  - AQE's coalesce floor (coalescePartitions.minPartitionNum
-    #    defaults to defaultParallelism) drops to the slot count, so
-    #    TINY reduce sides coalesce 2x-cpus -> cpus at runtime while
-    #    data-sized shuffles keep shuffle_parts (size-adaptive: exactly
-    #    the per-lane granularity split VERDICT r12 asked for).
-    # Measured r13-opt (interleaved medians-of-medians, fresh JVM per
-    # sample): heavy-lane subset -21% (ngram_jaccard -41%, minhash_lsh
-    # -34%, corpus_dup_fraction -37%, bigram_tf -31%), short-lane subset
-    # flat within noise (q1/join focused re-run 5.23 -> 5.48 s with
-    # overlapping samples). Override knob for A/Bs and deployments:
-    # SPARK_GRAFT_EXTRA_CONF="spark.default.parallelism=N".
-
-    # local-mode executors live INSIDE the driver JVM, so the driver heap
-    # is the whole engine's memory. Spark's 1g default starves 32 task
-    # threads the moment data outgrows toy scale (first caught by the
-    # sf1 rehearsal: broadcast-build + sort-spill OOMs at lineitem 6M).
-    # Sized generously for the bench host; harmless when unused, and a
-    # no-op if the JVM already exists (getOrCreate on a live session).
+    # spark.default.parallelism is deliberately NOT set: left alone it
+    # equals the task-slot count, the width spread() gives CPU-bound
+    # per-row stages and AQE's coalesce floor for tiny reduce sides
+    # (-21% on the heaviest queries, short ones flat).
+    # Local-mode executors live inside the driver JVM, so the driver heap
+    # is the whole engine's memory; Spark's 1g default OOMs once data
+    # outgrows toy scale. A no-op if the JVM already exists.
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
 
     builder = (
@@ -109,13 +107,10 @@ def get_session(config: EngineConfig | None = None) -> SparkSession:
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     )
     for k, v in cfg.extra_conf.items():
         builder = builder.config(k, str(v))
-    # Deployment/experiment overrides without code edits (the guide's
-    # "keep scale-dependent settings parameterised" rule): semicolon-
+    # Deployment/experiment overrides without code edits: semicolon-
     # separated k=v pairs, applied last so they win over the defaults
     # above and over EngineConfig.extra_conf. Empty/None-valued entries
     # are ignored. Example:
@@ -128,19 +123,19 @@ def get_session(config: EngineConfig | None = None) -> SparkSession:
             k, v = pair.split("=", 1)
             env_overrides[k.strip()] = v.strip()
             builder = builder.config(k.strip(), v.strip())
+    _export_package_path()
     spark = builder.getOrCreate()
-    # ADVICE r12: when a SparkSession already exists in the process
-    # (pytest session fixture, repeated get_session calls), getOrCreate
-    # returns it and builder.config only lands for runtime-settable SQL
-    # confs — the "applied last so they win" guarantee silently does
-    # not hold for static ones. Surface that instead of hiding it.
+    # When a SparkSession already exists in the process (pytest session
+    # fixture, repeated get_session calls), getOrCreate returns it and
+    # builder.config only lands for runtime-settable SQL confs — the
+    # "applied last so they win" guarantee silently does not hold for
+    # static ones. Surface that instead of hiding it.
     for k, v in env_overrides.items():
         try:
             cur = spark.conf.get(k)
         except Exception:  # noqa: BLE001 — unknown keys have no default
             continue
         if cur != v:
-            import sys
             print(f"session: SPARK_GRAFT_EXTRA_CONF wants {k}={v} but the "
                   f"pre-existing session has {cur} (static conf cannot be "
                   f"changed after startup)", file=sys.stderr)

@@ -104,18 +104,20 @@ def run_pipeline_stream(
     """Wire the streaming job: one Spark job per micro-batch.
 
     Main files are named `part-<query>-<batch_id>-<pid>.parquet`, flat
-    in `main_out_dir` (a local path). `<query>` is a hash of the
-    checkpoint path, so queries sharing `main_out_dir` (each starts at
-    batch 0) never overwrite each other's files, while a replay of a
-    batch (SURVEY.md §3.3: replayed batch => same id) overwrites its
-    own.
+    in `main_out_dir` (a local path), and bulk doc ids and spool files
+    start with the same `<query>-<batch_id>`. `<query>` is a hash of the
+    checkpoint path, so queries sharing an output (each starts at
+    batch 0) never overwrite each other's files or docs, while a replay
+    of a batch (SURVEY.md §3.3: replayed batch => same id) overwrites
+    its own.
     """
     query_key = hashlib.sha1(
         os.path.abspath(checkpoint_dir).encode("utf-8")).hexdigest()[:12]
 
     def write_all(batch_df: DataFrame, batch_id: int) -> None:
-        sink = PartitionSink(main_out_dir, f"part-{query_key}-{batch_id}",
-                             bulk_writer.poster(batch_id))
+        batch_key = f"{query_key}-{batch_id}"
+        sink = PartitionSink(main_out_dir, f"part-{batch_key}",
+                             bulk_writer.poster(batch_key))
 
         def write_partition(batches):
             n, total, docs = sink.write(batches, task_partition_id())

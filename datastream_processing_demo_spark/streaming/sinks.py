@@ -22,8 +22,9 @@ order recur:
 - main rows go to `part-<query>-<batch_id>-<pid>.parquet`, written
   under a dot-prefixed temp name and moved into place with
   `os.replace`, so a replay overwrites the file instead of appending;
-- bulk doc ids are `{batch_id}-{pid}-{ordinal}`, so a replay rewrites
-  the same ids at an `_id`-keyed store;
+- bulk doc ids are `<query>-<batch_id>-<pid>-<ordinal>`, so a replay
+  rewrites the same ids at an `_id`-keyed store, and queries sharing the
+  store (each starts at batch 0) never collide;
 - the metric file is keyed by batch id.
 
 Bulk transport is injectable: an `http(s)://` endpoint posts through a
@@ -167,9 +168,10 @@ def task_partition_id() -> int:
 @dataclass(frozen=True)
 class BulkPoster:
     """The executor side of `HttpBulkWriter` for one micro-batch: plain
-    values only, so it pickles into the task."""
+    values only, so it pickles into the task. `batch_key` names the
+    micro-batch: `<query>-<batch_id>` in the pipeline."""
     endpoint: str
-    batch_id: int
+    batch_key: str
     batch_size: int
     retry_attempts: int
     backoff_s: float
@@ -182,7 +184,7 @@ class BulkPoster:
     def post(self, payloads: Iterable[pa.Array], pid: int) -> int:
         """Post one partition's session payloads (nulls and the literal
         'error' skipped) as `batch_size`-doc chunks; returns docs posted.
-        Doc ids are `{batch_id}-{pid}-{ordinal}`, the ordinal counting
+        Doc ids are `{batch_key}-{pid}-{ordinal}`, the ordinal counting
         posted docs in partition order."""
         buf: list[str] = []
         chunk_no = 0
@@ -201,7 +203,7 @@ class BulkPoster:
                 # file atomically instead of appending a duplicate.
                 path = os.path.join(
                     self.endpoint,
-                    f"bulk-{self.batch_id}-{pid}-{chunk_no}.ndjson")
+                    f"bulk-{self.batch_key}-{pid}-{chunk_no}.ndjson")
                 tmp = f"{path}.tmp-{os.getpid()}"
                 with open(tmp, "w", encoding="utf-8") as f:
                     f.write(body)
@@ -215,7 +217,7 @@ class BulkPoster:
                     if doc is None or doc == _BULK_DROP_LITERAL:
                         continue
                     buf.append(json.dumps(
-                        {"_id": f"{self.batch_id}-{pid}-{ordinal}",
+                        {"_id": f"{self.batch_key}-{pid}-{ordinal}",
                          "doc": doc}))
                     ordinal += 1
                     if len(buf) >= self.batch_size:
@@ -258,9 +260,9 @@ class HttpBulkWriter:
         self.retry_attempts = retry_attempts
         self.backoff_s = backoff_s
 
-    def poster(self, batch_id: int) -> BulkPoster:
+    def poster(self, batch_key: str) -> BulkPoster:
         """Driver side, once per micro-batch: the poster its tasks run."""
-        poster = BulkPoster(self.endpoint, batch_id, self.batch_size,
+        poster = BulkPoster(self.endpoint, batch_key, self.batch_size,
                             self.retry_attempts, self.backoff_s,
                             self.auth_header)
         if not poster.is_http:
@@ -277,15 +279,16 @@ class HttpBulkWriter:
             # The trailing * also catches .ndjson.tmp-{pid} orphans from
             # an attempt that died between open() and os.replace().
             for stale in glob.glob(os.path.join(
-                    self.endpoint, f"bulk-{batch_id}-*.ndjson*")):
+                    self.endpoint, f"bulk-{batch_key}-*.ndjson*")):
                 os.remove(stale)
         return poster
 
     def write_batch(self, tails: DataFrame, batch_id: int) -> int:
         """Post a frame's `payload` column on its own; returns docs
-        posted. The pipeline posts inside its fused pass instead
-        (`PartitionSink`); both run `BulkPoster.post`."""
-        poster = self.poster(batch_id)
+        posted. Its doc ids carry no query key, so only one query should
+        post to a store this way. The pipeline posts inside its fused
+        pass instead (`PartitionSink`); both run `BulkPoster.post`."""
+        poster = self.poster(str(batch_id))
 
         def post(batches: Iterator[pa.RecordBatch]):
             docs = poster.post((b.column(0) for b in batches),

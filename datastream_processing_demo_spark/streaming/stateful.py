@@ -6,7 +6,8 @@ from sink-side batch buffers to first-class per-key operator state).
 
 Scale notes: state is one fixed-size tuple per user_id — O(distinct keys),
 not O(events). At 100 TB the keyspace is what must fit in the state store
-(RocksDB, configured in session.py); pass `idle_timeout` so keys idle
+(HDFS-backed on the heap by default; session.py says when to switch to
+RocksDB); pass `idle_timeout` so keys idle
 past the watermark are evicted — a lifetime running total over an
 unbounded keyspace with no eviction would grow state forever.
 """

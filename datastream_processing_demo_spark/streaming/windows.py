@@ -9,8 +9,10 @@ streaming frames (batch frames ignore withWatermark).
 
 Scale notes: all aggregations key on (window, low-cardinality key) so
 state stays bounded; watermarks cap state retention (stateful ops
-without watermarks would grow state forever at 100 TB/day); RocksDB
-state store is configured in session.py.
+without watermarks would grow state forever at 100 TB/day). State
+lives in Spark's default HDFS-backed store, on the JVM heap; session.py
+gives the state size from which RocksDB is the better store and how to
+switch.
 """
 
 from __future__ import annotations

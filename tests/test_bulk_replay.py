@@ -150,11 +150,38 @@ def test_failed_bulk_post_replays_to_exactly_once_effective(spark, tmp_path):
         # The replay actually re-posted (more requests than a clean run
         # would need: ceil-per-partition chunks, two attempts).
         assert state["n_posts"] > 1
-        # Ids carry (batch_id, partition_id, ordinal) — all unique.
-        assert all(len(i.split("-")) == 3 for i in state["docs"])
+        # Ids carry (query, batch_id, partition_id, ordinal) — all unique.
+        assert all(len(i.split("-")) == 4 for i in state["docs"])
         # The main file and the metric were written by both attempts
         # too; the replay overwrote them instead of adding to them.
         _assert_main_and_metric_once(str(tmp_path), n_msgs)
+    finally:
+        srv.shutdown()
+
+
+def test_two_queries_on_one_id_keyed_store_keep_every_doc(spark, tmp_path):
+    # Both queries start at batch 0 with the same partitioning, so ids
+    # without the query key would collide and the store would keep only
+    # one query's docs.
+    srv, state = _start_bulk_server(fail_first_n=0)
+    endpoint = f"http://127.0.0.1:{srv.server_address[1]}/bulk"
+    want = []
+    try:
+        for tag in ("a", "b"):
+            payloads = [f'{{"q": "{tag}", "k": {i}}}' for i in range(20)]
+            want += payloads
+            src_dir = str(tmp_path / f"msgs_{tag}")
+            _write_messages([f"{'session':<16}{'1700000000000':<16}"
+                             + " " * 32 + p for p in payloads], src_dir)
+            run_pipeline_stream(
+                spark.readStream.schema("value string").parquet(src_dir),
+                checkpoint_dir=str(tmp_path / f"ckpt_{tag}"),
+                main_out_dir=str(tmp_path / "main"),
+                bulk_writer=HttpBulkWriter(endpoint),
+                metric_reporter=MetricAvgReporter(
+                    str(tmp_path / f"metric_{tag}")),
+                now_ms=F.lit(1700000001000)).awaitTermination(timeout=180)
+        assert sorted(state["docs"].values()) == sorted(want)
     finally:
         srv.shutdown()
 

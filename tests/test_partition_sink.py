@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datastream_processing_demo_spark.streaming.sinks import (
     BulkPoster,
+    HttpBulkWriter,
     MetricAvgReporter,
     PartitionSink,
 )
@@ -52,10 +53,11 @@ def _batches() -> list[pa.RecordBatch]:
             *table.slice(4).to_batches()]
 
 
-def _sink(tmp_path, batch_id: int = 7, batch_size: int = 2) -> PartitionSink:
-    poster = BulkPoster(str(tmp_path / "bulk"), batch_id, batch_size,
+def _sink(tmp_path, batch_key: str = "q-7",
+          batch_size: int = 2) -> PartitionSink:
+    poster = BulkPoster(str(tmp_path / "bulk"), batch_key, batch_size,
                         retry_attempts=1, backoff_s=0.0, auth_header=None)
-    return PartitionSink(str(tmp_path / "main"), f"part-q-{batch_id}", poster)
+    return PartitionSink(str(tmp_path / "main"), f"part-{batch_key}", poster)
 
 
 def _chunks(tmp_path) -> dict[str, list[dict]]:
@@ -80,9 +82,9 @@ def test_partition_pass_writes_main_posts_docs_and_sums_delays(tmp_path):
     # session docs minus 'error', chunked at batch_size, ids by ordinal
     assert docs == 3
     assert _chunks(tmp_path) == {
-        "bulk-7-3-0.ndjson": [{"_id": "7-3-0", "doc": '{"k": 0}'},
-                              {"_id": "7-3-1", "doc": '{"k": 1}'}],
-        "bulk-7-3-1.ndjson": [{"_id": "7-3-2", "doc": '{"k": 2}'}],
+        "bulk-q-7-3-0.ndjson": [{"_id": "q-7-3-0", "doc": '{"k": 0}'},
+                                {"_id": "q-7-3-1", "doc": '{"k": 1}'}],
+        "bulk-q-7-3-1.ndjson": [{"_id": "q-7-3-2", "doc": '{"k": 2}'}],
     }
 
 
@@ -96,6 +98,21 @@ def test_partition_pass_replay_overwrites(tmp_path):
     assert pq.read_metadata(
         tmp_path / "main" / "part-q-7-3.parquet").num_rows == len(ROWS)
     assert _chunks(tmp_path) == chunks
+
+
+def test_two_queries_share_a_spool_and_replay_clears_only_its_own(tmp_path):
+    # the same batch id and partition of two queries, as the pipeline
+    # keys them: `<query>-<batch_id>`
+    writer = HttpBulkWriter(str(tmp_path / "bulk"), batch_size=2)
+    for key in ("qa-7", "qb-7"):
+        PartitionSink(str(tmp_path / "main"), f"part-{key}",
+                      writer.poster(key)).write(iter(_batches()), pid=3)
+    docs = [d for chunk in _chunks(tmp_path).values() for d in chunk]
+    assert len({d["_id"] for d in docs}) == len(docs) == 6
+    # a replay of query qa's batch 7 clears qa's chunks, not qb's
+    writer.poster("qa-7")
+    assert sorted(_chunks(tmp_path)) == ["bulk-qb-7-3-0.ndjson",
+                                         "bulk-qb-7-3-1.ndjson"]
 
 
 def test_empty_partition_writes_nothing(tmp_path):

@@ -7,6 +7,7 @@ complete; `plog` publishes the acked watermark in _acks/committed.json)."""
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -212,3 +213,33 @@ def test_executor_side_producer_byte_identical(spark, sf_dir, tmp_path):
         a = open(os.path.join(ref_dir, name), "rb").read()
         b = open(os.path.join(got_dir, name), "rb").read()
         assert a == b, f"file {name} differs"
+
+
+def test_plog_reads_from_any_working_directory(tmp_path):
+    """get_session hands the package to the Python workers, which
+    unpickle the `plog` source by module path: a driver started outside
+    the checkout, with PYTHONPATH unset, reads a micro-batch."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    log_dir = str(tmp_path / "log")
+    PartitionedLogWriter(log_dir, 1).append(0, [("k", "v0"), ("k", "v1")])
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+from datastream_processing_demo_spark.session import EngineConfig, get_session
+from datastream_processing_demo_spark.sources.plog import (
+    PartitionedLogDataSource)
+spark = get_session(EngineConfig(app_name="plog-cwd", master="local[1]"))
+spark.dataSource.register(PartitionedLogDataSource)
+q = (spark.readStream.format("plog").option("path", {log_dir!r})
+     .option("partitions", "1").load()
+     .writeStream.format("memory").queryName("got")
+     .trigger(availableNow=True).start())
+q.awaitTermination(120)
+print("rows", spark.table("got").count())
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=300)
+    assert "rows 2" in out.stdout.splitlines(), out.stderr[-3000:]

@@ -564,3 +564,99 @@ def test_stream_chunk_dir_invariants(spark, sf_dir, tmp_path, monkeypatch):
         key = list(zip(us.tolist(), pdf["event_id"].tolist()))
         assert key == sorted(key), f"{f} not (ts, event_id)-sorted"
     assert total == ev.count()
+
+
+_STORE_KEY = "spark.sql.streaming.stateStore.providerClass"
+HDFS_STORE = ("org.apache.spark.sql.execution.streaming.state."
+              "HDFSBackedStateStoreProvider")
+ROCKSDB_STORE = ("org.apache.spark.sql.execution.streaming.state."
+                 "RocksDBStateStoreProvider")
+
+
+def test_default_state_store_is_hdfs_backed(spark):
+    # conftest's SPARK_GRAFT_STATESTORE sweep replaces the default
+    want = os.environ.get("SPARK_GRAFT_STATESTORE", HDFS_STORE)
+    assert spark.conf.get(_STORE_KEY) == want
+
+
+def _dedup_window_counts(spark, src_dir: str, ckpt: str, counts: dict,
+                         store: str | None = None):
+    """Run dedup_within_watermark + a 6 h window x user count over the
+    files in `src_dir` (one per micro-batch) to the end, in update mode;
+    each update lands in `counts`, keyed by (window start in epoch
+    seconds, user_id). `store` sets the state store the query starts
+    with; the session's setting is restored afterwards."""
+    events = (spark.readStream.schema(EVENTS)
+              .option("maxFilesPerTrigger", 1).parquet(src_dir))
+    agg = (dedup_within_watermark(events, watermark="30 days")
+           .groupBy(F.window("ts", "6 hours").alias("win"), "user_id")
+           .agg(F.count(F.lit(1)).alias("n"))
+           .select(F.col("win.start").cast("long").alias("start"),
+                   "user_id", "n"))
+
+    def sink(df, _batch_id):
+        counts.update(((r["start"], r["user_id"]), r["n"])
+                      for r in df.collect())
+
+    before = spark.conf.get(_STORE_KEY)
+    if store is not None:
+        spark.conf.set(_STORE_KEY, store)
+    try:
+        q = (agg.writeStream.outputMode("update").foreachBatch(sink)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+    finally:
+        spark.conf.set(_STORE_KEY, before)
+    q.awaitTermination(timeout=180)
+    assert q.exception() is None
+    return q
+
+
+def _state_custom_metrics(q) -> set[str]:
+    return {k for p in q.recentProgress for op in p["stateOperators"]
+            for k in op["customMetrics"]}
+
+
+def test_rocksdb_checkpoint_restarts_under_default_store(
+        spark, events_pdf, tmp_path):
+    """A query checkpointed under RocksDB restarts, now that the session
+    default is the HDFS-backed store, on RocksDB (the provider is in the
+    checkpoint's offset metadata) and ends with the counts of an
+    uninterrupted HDFS-backed run, which match pandas."""
+    src = str(tmp_path / "events")
+    _write_chunks(events_pdf, src, n_chunks=3)
+    # the first chunk's events again, as a fourth file: cross-batch dups
+    first = events_pdf.iloc[:len(events_pdf) // 3]
+    _write_chunks(first, str(tmp_path / "dup_tmp"), 1)
+    files = sorted(glob.glob(os.path.join(src, "*.parquet")))
+    files.append(os.path.join(src, "chunk-zz-dup.parquet"))
+    os.rename(glob.glob(str(tmp_path / "dup_tmp" / "*.parquet"))[0],
+              files[-1])
+    # hide the last two files from the first incarnation
+    held = str(tmp_path / "held")
+    os.makedirs(held)
+    for f in files[2:]:
+        os.rename(f, os.path.join(held, os.path.basename(f)))
+
+    restarted: dict = {}
+    ckpt = str(tmp_path / "ckpt_restart")
+    q1 = _dedup_window_counts(spark, src, ckpt, restarted,
+                              store=ROCKSDB_STORE)
+    assert any(k.startswith("rocksdb") for k in _state_custom_metrics(q1))
+    for f in files[2:]:
+        os.rename(os.path.join(held, os.path.basename(f)), f)
+    q2 = _dedup_window_counts(spark, src, ckpt, restarted)
+    assert q2.recentProgress, "the restart processed no batch"
+    assert any(k.startswith("rocksdb") for k in _state_custom_metrics(q2))
+
+    uninterrupted: dict = {}
+    q3 = _dedup_window_counts(spark, src, str(tmp_path / "ckpt_hdfs"),
+                              uninterrupted, store=HDFS_STORE)
+    assert not any(k.startswith("rocksdb")
+                   for k in _state_custom_metrics(q3))
+
+    ev = events_pdf.drop_duplicates("event_id")
+    start = (ev["ts"].dt.floor("6h").astype("int64") // 1_000_000)
+    want = ev.groupby([start, ev["user_id"]]).size()
+    assert restarted == uninterrupted == {
+        (int(s), int(u)): int(n) for (s, u), n in want.items()}
