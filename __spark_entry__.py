@@ -1,12 +1,13 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry-point contract of the batch query surface (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke query; ``queries()[name]`` runs a registered
+query over a testdata directory (sf0.01 in the oracle tests), and
+``oracle_sql()[name]`` is the DuckDB SQL it is compared against
+(row count, schema and an order-insensitive value hash; see
+tools/selfcheck.py and tests/test_oracle_queries.py).
 
 All real logic lives in ``datastream_processing_demo_spark``; this file
-just adapts the plan registry to the driver's entry-point shape.
+just adapts the plan registry to the entry-point shape.
 """
 
 from __future__ import annotations
@@ -21,7 +22,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from datastream_processing_demo_spark.plans.registry import (  # noqa: E402
     all_queries,
-    ordered_queries,
 )
 
 
@@ -32,15 +32,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.2.
-
-    Order is category-interleaved (registry.ordered_queries) so any prefix
-    the driver checks samples every category; rows-only queries come last.
-    """
-    return {name: spec.spark for name, spec in ordered_queries().items()}
+    """One entry per implemented operator from SURVEY.md §2.2, in
+    registration order."""
+    return {name: spec.spark for name, spec in all_queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable oracle SQL for every hash-checkable query."""
-    return {name: spec.oracle for name, spec in ordered_queries().items()
+    return {name: spec.oracle for name, spec in all_queries().items()
             if spec.oracle is not None}

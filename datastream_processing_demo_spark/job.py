@@ -11,8 +11,10 @@ does the same with Spark idioms:
 
 Config keys mirror the reference's properties surface (§2.1 config
 table): parallelism, checkpoint_interval, checkpoint_location,
-source_dir (stands in for pulsar_topics — a file-stream dir; a Kafka
-`subscribe` string would slot in the same place on a real cluster),
+source_dir (stands in for pulsar_topics: a `plog` partitioned-log
+directory, sources/plog.py, read with the partitions its `.hwm`
+sidecars name and acked on each checkpoint; a Kafka `subscribe` string
+would slot in the same place on a real cluster),
 bulk_endpoint (ctsdb_addr analogue), bulk_batch_size (ctsdb_batch_size),
 metric_spool_dir (zhiyan analogue), main_out_dir.
 """
@@ -21,11 +23,13 @@ from __future__ import annotations
 
 import argparse
 import configparser
+import json
 import sys
 
 from pyspark.sql import functions as F
 
 from .session import EngineConfig, get_session
+from .sources.plog import PartitionedLogDataSource, ack
 from .streaming.pipeline import run_pipeline_stream
 from .streaming.sinks import HttpBulkWriter, MetricAvgReporter
 
@@ -96,11 +100,15 @@ def run(argv: list[str] | None = None, await_termination: bool = True):
         parallelism=int(cfg["parallelism"]),
     ))
     trigger = {"processingTime": f"{int(cfg['checkpoint_interval'])} milliseconds"}
-    if cfg.get("run_once", "false").lower() == "true":
+    run_once = cfg.get("run_once", "false").lower() == "true"
+    if run_once:
         trigger = {"availableNow": True}
 
+    spark.dataSource.register(PartitionedLogDataSource)
+
     def start_fn():
-        raw = spark.readStream.schema("value string").parquet(cfg["source_dir"])
+        raw = (spark.readStream.format("plog")
+               .option("path", cfg["source_dir"]).load())
         return run_pipeline_stream(
             raw,
             checkpoint_dir=cfg["checkpoint_location"],
@@ -119,6 +127,12 @@ def run(argv: list[str] | None = None, await_termination: bool = True):
     query = stop_and_replace(spark, "datastream-pipeline", start_fn)
     if await_termination:
         query.awaitTermination()
+        if run_once and query.lastProgress is not None:
+            # Spark acks a batch's offsets when it plans the next batch,
+            # which a drain-and-stop run never does: ack the last batch,
+            # whose checkpoint committed before the query stopped.
+            progress = json.loads(query.lastProgress.json)
+            ack(cfg["source_dir"], progress["sources"][0]["endOffset"])
     return query
 
 

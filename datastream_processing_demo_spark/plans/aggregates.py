@@ -545,7 +545,7 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "agg_approx_bounds", "aggregates", boost=True,
+    "agg_approx_bounds", "aggregates",
     # Driver-checkable companion to agg_approx: the HLL estimate and the
     # t-digest median are engine-internal VALUES (no ANSI oracle can
     # reproduce them), but their error CONTRACTS are checkable — emit
@@ -580,7 +580,7 @@ def agg_approx_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "agg_sketch_bounds", "aggregates", boost=True,
+    "agg_sketch_bounds", "aggregates",
     # Property-oracle companion to agg_sketch_rollup: exact per-grain
     # distinct counts (both engines compute them exactly) plus a flag
     # that every unioned-sketch estimate lands inside the DataSketches

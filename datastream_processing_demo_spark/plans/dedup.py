@@ -280,7 +280,7 @@ _SHINGLE3_JACCARD09_TRUTH = """
 
 
 @query(
-    "dedup_simhash", "dedup", boost=True,
+    "dedup_simhash", "dedup",
     # The PRODUCTION fixed-width SimHash pipeline: 4 x 63-bit xxhash64
     # words -> pigeonhole-with-probes block join at radius 40 ->
     # exact-Jaccard VERIFY at 0.9. The verify makes precision exact and

@@ -305,7 +305,7 @@ def array_explode_outer_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "map_higher_order", "json_array", boost=True,
+    "map_higher_order", "json_array",
     oracle="""
     WITH base AS (
         SELECT p_partkey,
@@ -385,7 +385,7 @@ def json_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "map_str_to_map", "json_array", boost=True,
+    "map_str_to_map", "json_array",
     oracle="""
     SELECT event_id,
            CAST(event_id AS VARCHAR) AS id_val,

@@ -131,7 +131,7 @@ def mm_audio_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "mm_audio_wav_real", "multimodal", boost=True,
+    "mm_audio_wav_real", "multimodal",
     oracle=_AUDIO_FEATURES_ORACLE,
     description="audio lane with the REAL WAV codec: RIFF-wrap payloads, parse with stdlib wave, identical features",
 )
@@ -176,7 +176,7 @@ _IMAGE_FEATURES_ORACLE = """
 
 
 @query(
-    "mm_image_ppm_real", "multimodal", boost=True,
+    "mm_image_ppm_real", "multimodal",
     # Real IMAGE container codec end-to-end (netpbm needs no PIL): each
     # document's bytes become a genuine P6 PPM (comment-bearing header +
     # zero-padded RGB raster) in one Arrow stage; the next stage parses

@@ -30,24 +30,19 @@ class QuerySpec:
     oracle: str | None        # DuckDB SQL over pre-registered views; None => rows-only check
     category: str
     description: str = ""
-    boost: bool = False       # jump the never-checked queue: set on queries
-    #                           that would give a SURVEY §2.2 row its FIRST
-    #                           driver-green verdict (cleared once verdicted)
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
 def query(name: str, category: str, oracle: str | None = None,
-          description: str = "",
-          boost: bool = False) -> Callable[[SparkQuery], SparkQuery]:
+          description: str = "") -> Callable[[SparkQuery], SparkQuery]:
     """Decorator registering a (spark, sf_dir) -> DataFrame query."""
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
         _REGISTRY[name] = QuerySpec(name=name, spark=fn, oracle=oracle,
-                                    category=category, description=description,
-                                    boost=boost)
+                                    category=category, description=description)
         return fn
     return deco
 
@@ -56,129 +51,6 @@ def all_queries() -> dict[str, QuerySpec]:
     from . import load_all
     load_all()
     return dict(_REGISTRY)
-
-
-_LEDGER_CACHE: dict | None = None
-
-
-def _driver_ledger() -> dict:
-    """Cumulative driver verdicts (DRIVER_LEDGER.json at the repo root,
-    regenerated by tools/gen_ledger.py after each round's CORRECTNESS
-    file lands). Empty dict if the file is absent — ordering then
-    degrades to plain category interleave."""
-    global _LEDGER_CACHE
-    if _LEDGER_CACHE is None:
-        import json
-        from pathlib import Path
-        path = Path(__file__).resolve().parents[2] / "DRIVER_LEDGER.json"
-        try:
-            _LEDGER_CACHE = json.loads(path.read_text())
-        except (OSError, ValueError):
-            _LEDGER_CACHE = {}
-    return _LEDGER_CACHE
-
-
-def _interleave(specs_by_cat: dict[str, list[QuerySpec]]) -> list[QuerySpec]:
-    """Round-robin across categories, preserving within-category order."""
-    out: list[QuerySpec] = []
-    queues = {c: list(v) for c, v in specs_by_cat.items() if v}
-    while queues:
-        for cat in list(queues):
-            out.append(queues[cat].pop(0))
-            if not queues[cat]:
-                del queues[cat]
-    return out
-
-
-def ordered_queries() -> dict[str, QuerySpec]:
-    """Registry ordered so a driver that checks only the first N entries
-    spends its window where it buys the most new information.
-
-    Ordering contract (locked in by tools/selfcheck.py + tests):
-    1. Last-verdict RED queries lead (a fixed red needs an official
-       driver verdict), category-interleaved.
-    2. Then every NEVER driver-checked query (boosted ones — first
-       driver-green path for a SURVEY §2.2 row — lead their category's
-       queue), category-interleaved. A first-time verdict is worth more
-       than re-sampling an already-green category, so greens NEVER
-       displace these, even when the first-time backlog exceeds the
-       window (r4 ledger: 55 never-checked vs a 50-slot window — the
-       old one-green-rep-per-category head block cost 8 first-time
-       verdicts there).
-    3. Then one stalest-green representative per category, so once the
-       first-time backlog fits the window, any prefix samples every
-       category again.
-    4. Then the remaining greens, stalest round first, interleaved.
-    5. Oracle-less (rows-only) queries go last: they can never
-       hash-match, so they must not occupy checked slots ahead of
-       exactly-oracled queries.
-
-    Priorities come from DRIVER_LEDGER.json (see tools/gen_ledger.py),
-    which makes per-round rotation mechanical: regenerate the ledger and
-    the next window picks itself.
-    """
-    ledger = _driver_ledger()
-
-    def prio(spec: QuerySpec) -> tuple[int, int]:
-        rec = ledger.get(spec.name)
-        if rec is None:
-            # never driver-checked; boosted queries (first driver-green
-            # path for a SURVEY §2.2 row) lead their category's queue
-            return (1, 0 if spec.boost else 1)
-        if rec["verdict"] == "red":
-            return (0, 0)                       # fixed red: re-check first
-        if rec["verdict"] == "rows_only" and spec.oracle is not None:
-            # checked back when it had no oracle; the exact oracle it has
-            # NOW has never been driver-exercised — rank with never-checked
-            return (1, 0 if spec.boost else 1)
-        return (2, rec["round"])                # green/rows_only: stalest first
-
-    by_cat: dict[str, list[QuerySpec]] = {}
-    for spec in all_queries().values():
-        by_cat.setdefault(spec.category, []).append(spec)
-
-    with_oracle = {c: sorted((s for s in v if s.oracle is not None), key=prio)
-                   for c, v in by_cat.items()}
-    without_oracle = {c: [s for s in v if s.oracle is None]
-                      for c, v in by_cat.items()}
-
-    classes: dict[tuple[int, int], dict[str, list[QuerySpec]]] = {}
-    for cat, specs in with_oracle.items():
-        for s in specs:
-            classes.setdefault(prio(s), {}).setdefault(cat, []).append(s)
-
-    # blocks 1+2: red, then never-checked — every first-time verdict
-    # before any green
-    first_time: list[QuerySpec] = []
-    green_by_cat: dict[str, list[QuerySpec]] = {}
-    for key in sorted(classes):
-        if key[0] < 2:
-            first_time.extend(_interleave(classes[key]))
-        else:
-            for cat, specs in classes[key].items():
-                # keys ascend => stalest round first within each category
-                green_by_cat.setdefault(cat, []).extend(specs)
-
-    # block 3: one stalest-green rep per category (re-sampling hedge)
-    reps = [specs[0] for specs in green_by_cat.values()]
-    rep_names = {s.name for s in reps}
-
-    # block 4: remaining greens, STRICTLY stalest round first (category
-    # round-robin only breaks ties WITHIN a round — a plain cross-category
-    # interleave let fresher rounds jump ahead of staler ones, which is how
-    # 10 of the 19 <=r3 queries missed the r9 window before this fix)
-    rest_by_round: dict[int, dict[str, list[QuerySpec]]] = {}
-    for cat, specs in green_by_cat.items():
-        for s in specs:
-            if s.name not in rep_names:
-                rnd = ledger[s.name]["round"]
-                rest_by_round.setdefault(rnd, {}).setdefault(cat, []).append(s)
-    green_rest: list[QuerySpec] = []
-    for rnd in sorted(rest_by_round):
-        green_rest.extend(_interleave(rest_by_round[rnd]))
-
-    ordered = first_time + reps + green_rest + _interleave(without_oracle)
-    return {s.name: s for s in ordered}
 
 
 def get(name: str) -> QuerySpec:

@@ -259,7 +259,7 @@ def _stream_chunk_dir_late(spark: SparkSession, sf_dir: str,
 
 
 @query(
-    "stream_live_late_drop", "streaming", boost=True,
+    "stream_live_late_drop", "streaming",
     # Closed form of the watermark's late-data contract: the emitted
     # table is exactly the watermark-closed windows over the ON-TIME
     # rows. Had Spark accepted a held-back row into a closed window, its
@@ -774,7 +774,7 @@ def stream_live_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "stream_live_stateful_totals", "streaming", boost=True,
+    "stream_live_stateful_totals", "streaming",
     # The custom-stateful-operator contract in closed form: after the
     # whole stream is consumed, each user's FINAL emitted state must
     # equal the batch aggregate over all their events. n_events is
@@ -916,7 +916,7 @@ def write_plog_partitions(rows, log_dir: str, n_parts: int, n_rounds: int,
 
 
 @query(
-    "stream_plog_source", "streaming", boost=True,
+    "stream_plog_source", "streaming",
     # S1 live e2e (reference PulsarSource.java:22-214): a REAL streaming
     # query over the custom partitioned-log DataSource — per-partition
     # offsets, paced micro-batches (maxRoundsPerTrigger=1 => one producer

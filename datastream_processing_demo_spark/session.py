@@ -1,11 +1,11 @@
 """SparkSession factory + engine config surface.
 
-Mirrors the reference's config surface (DataStreamProcessingJob.java:70-96:
-parallelism, checkpoint_interval, checkpoint_min_pause,
-max_concurrent_checkpoints, source/sink parallelism, sink batch
-size/time) as idiomatic Spark settings. The reference hand-tunes a Flink
-job; here the same knobs become SparkSession config so Catalyst + AQE do
-the physical planning.
+The reference hand-tunes a Flink job (DataStreamProcessingJob.java:70-96).
+Here the session carries only what is session-wide (parallelism as
+shuffle partitions, plus config overrides) so Catalyst + AQE do the
+physical planning; the per-job knobs (checkpoint interval and location,
+sink batch size) are arguments of the streaming query and its sinks,
+set by job.py from the properties file.
 
 Scale notes (100 TB design point):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting, and
@@ -40,18 +40,13 @@ from pyspark.sql import SparkSession
 
 @dataclass(frozen=True)
 class EngineConfig:
-    """Engine configuration. Fields mirror the reference's properties file
-    (DataStreamProcessingJob.java:70-96,104-115,121-122 and sink batch
-    knobs at :157-158, ZhiYanSink.java:28-29), re-expressed for Spark."""
+    """Session-wide engine configuration (per-job knobs live in job.py).
+    The session time zone is UTC; spark.sql.session.timeZone in
+    `extra_conf` or SPARK_GRAFT_EXTRA_CONF overrides it."""
 
     app_name: str = "datastream-processing-demo-spark"
     master: str | None = None          # default: local[$SPARK_GRAFT_CPUS]
     parallelism: int | None = None     # reference `parallelism` (default 8) -> shuffle partitions
-    checkpoint_interval_ms: int = 5000   # reference checkpoint_interval (:104)
-    checkpoint_location: str | None = None
-    sink_batch_size: int = 1000        # reference ctsdb_batch_size (:157)
-    sink_batch_time_s: int = 5         # reference ctsdb_batch_time (:158)
-    session_timezone: str = "UTC"
     extra_conf: dict = field(default_factory=dict)
 
 
@@ -102,7 +97,7 @@ def get_session(config: EngineConfig | None = None) -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", cfg.session_timezone)
+        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.shuffle.spill.compress", "true")

@@ -149,7 +149,6 @@ class _PartitionedLogStreamReader(DataSourceStreamReader):
             raise ValueError(
                 "plog source found no partitions; pass .option('partitions', n)"
                 " or point at an initialized log directory")
-        self.ack_dir = os.path.join(self.log_dir, "_acks")
         # pacing (the Kafka-source maxOffsetsPerTrigger analogue, in
         # units of producer append rounds = segment boundaries): each
         # latestOffset() advances at most k boundaries past what THIS
@@ -253,15 +252,22 @@ class _PartitionedLogStreamReader(DataSourceStreamReader):
 
     # -- ack ------------------------------------------------------------------
     def commit(self, end: dict) -> None:
-        # checkpoint completed through `end`: cumulative ack (the Pulsar
-        # acknowledgeCumulative analogue) — atomic replace so the acked
-        # watermark is always a complete, consistent snapshot
-        os.makedirs(self.ack_dir, exist_ok=True)
-        path = os.path.join(self.ack_dir, "committed.json")
-        tmp = f"{path}.tmp-{os.getpid()}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(end, f)
-        os.replace(tmp, path)
+        ack(self.log_dir, end)
+
+
+def ack(log_dir: str, end: dict) -> None:
+    """Cumulative ack (the Pulsar acknowledgeCumulative analogue) of a
+    checkpoint completed through `end` — atomic replace so the acked
+    watermark is always a complete, consistent snapshot. Spark calls it
+    (through `commit`) as it plans the batch after `end`'s; a query
+    that stops after its last batch acks that batch itself (job.py)."""
+    ack_dir = os.path.join(log_dir, "_acks")
+    os.makedirs(ack_dir, exist_ok=True)
+    path = os.path.join(ack_dir, "committed.json")
+    tmp = f"{path}.tmp-{os.getpid()}"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(end, f)
+    os.replace(tmp, path)
 
 
 def committed_acks(log_dir: str) -> dict | None:

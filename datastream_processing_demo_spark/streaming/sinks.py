@@ -50,7 +50,6 @@ from urllib.parse import urlparse
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame
 
 _BULK_DROP_LITERAL = "error"  # CTSDBSink.java:120-123
 
@@ -283,21 +282,6 @@ class HttpBulkWriter:
                 os.remove(stale)
         return poster
 
-    def write_batch(self, tails: DataFrame, batch_id: int) -> int:
-        """Post a frame's `payload` column on its own; returns docs
-        posted. Its doc ids carry no query key, so only one query should
-        post to a store this way. The pipeline posts inside its fused
-        pass instead (`PartitionSink`); both run `BulkPoster.post`."""
-        poster = self.poster(str(batch_id))
-
-        def post(batches: Iterator[pa.RecordBatch]):
-            docs = poster.post((b.column(0) for b in batches),
-                               task_partition_id())
-            yield pa.RecordBatch.from_pydict({"docs": [docs]})
-
-        rows = tails.select("payload").mapInArrow(post, "docs long").collect()
-        return sum(r["docs"] for r in rows)
-
 
 @dataclass(frozen=True)
 class PartitionSink:
@@ -328,7 +312,7 @@ class PartitionSink:
                 if writer is None:
                     os.makedirs(self.main_dir, exist_ok=True)
                     writer = pq.ParquetWriter(tmp, main.schema)
-                writer.write_batch(main)
+                writer.write(main)
                 delay = b.column("delay_ms")
                 n_delay += len(delay) - delay.null_count
                 sum_delay += pc.sum(delay).as_py() or 0

@@ -228,10 +228,10 @@ def test_transient_503_retained_chunk_retries_in_task(spark, tmp_path):
         srv.shutdown()
 
 
-def test_bulk_post_basic_auth_required(spark, tmp_path):
+def test_bulk_post_basic_auth_required():
     """CTSDBSink parity (CTSDBSink.java user/passwd, SURVEY §2.1 config
     surface): the bulk endpoint requires HTTP Basic auth. Without
-    credentials the POST is a non-retryable 401 -> the task raises;
+    credentials the POST is a non-retryable 401 -> the poster raises;
     with user/passwd the writer sends `Authorization: Basic ...` and
     every doc lands."""
     import base64
@@ -264,18 +264,16 @@ def test_bulk_post_basic_auth_required(spark, tmp_path):
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     endpoint = f"http://127.0.0.1:{srv.server_address[1]}/metric/doc/_bulk"
     payloads = [f'{{"k": {i}}}' for i in range(10)]
-    df = spark.createDataFrame([(p,) for p in payloads], "payload string") \
-        .repartition(2)
     try:
         # without credentials: 401 is a non-retryable client error
         with pytest.raises(Exception, match="401"):
-            HttpBulkWriter(endpoint, batch_size=4,
-                           retry_attempts=1).write_batch(df, batch_id=0)
+            HttpBulkWriter(endpoint, batch_size=4, retry_attempts=1) \
+                .poster("q-0").post([pa.array(payloads)], 0)
         assert state["n_unauth"] >= 1 and not state["docs"]
         # with credentials: every doc lands exactly once
         HttpBulkWriter(endpoint, batch_size=4, retry_attempts=1,
                        user="ctsdb_user", passwd="s3cret") \
-            .write_batch(df, batch_id=1)
+            .poster("q-1").post([pa.array(payloads)], 0)
         assert sorted(state["docs"].values()) == sorted(payloads)
     finally:
         srv.shutdown()

@@ -85,47 +85,6 @@ def test_stream_offsets_and_checkpoint_replay(spark, tmp_path):
     assert ks == want
 
 
-def test_bulk_spool_sink_end_to_end(spark, tmp_path):
-    """Custom source -> parse -> custom SINK: the reference topology's
-    outer edges both running on the Python DataSource API."""
-    from datastream_processing_demo_spark.sources.bulk_sink import (
-        BulkSpoolDataSource,
-    )
-    import glob
-    import json as _json
-
-    spark.dataSource.register(BulkSpoolDataSource)
-    spool = str(tmp_path / "spool")
-    src = (spark.readStream.format("fixedwidth_messages")
-           .option("rowsPerBatch", 100).option("maxRows", 300).load())
-    sessions = (parse_messages(src)
-                .filter(F.col("module_name") == "session")
-                .select("payload"))
-    q = (sessions.writeStream.format("bulk_spool")
-         .option("path", spool)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(processingTime="200 milliseconds").start())
-
-    want = [f'{{"k": {i}}}' for i in range(300)
-            if i % 3 != 0 and i % 97 != 0 and i % 101 != 0]
-
-    deadline = time.time() + 90
-    docs = []
-    while time.time() < deadline:
-        docs = []
-        for p in sorted(glob.glob(os.path.join(spool, "*.ndjson"))):
-            with open(p, encoding="utf-8") as f:
-                docs += [_json.loads(l) for l in f if l.strip()]
-        if len(docs) >= len(want):
-            break
-        time.sleep(1)
-    q.stop()
-    q.awaitTermination(timeout=30)
-
-    assert sorted(d["doc"] for d in docs) == sorted(want)
-    assert len({d["_id"] for d in docs}) == len(docs), "doc ids not unique"
-
-
 def test_kafka_option_mapping():
     """No broker in this environment — assert the reference-property ->
     Kafka-option mapping itself (the reader is real on a cluster)."""

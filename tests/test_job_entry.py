@@ -1,6 +1,6 @@
 """The CLI job entry point (job.py = reference main() analogue) wires a
-full run from a properties file: source dir -> three-way pipeline ->
-sinks, run-once mode."""
+full run from a properties file: `plog` source dir -> three-way
+pipeline -> sinks, run-once mode."""
 
 from __future__ import annotations
 
@@ -15,16 +15,21 @@ import pyarrow.parquet as pq
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datastream_processing_demo_spark.job import run
+from datastream_processing_demo_spark.sources.plog import (
+    PartitionedLogWriter,
+    committed_acks,
+)
 
 
 def test_job_runs_from_properties_file(spark, tmp_path):
     src = tmp_path / "src"
-    src.mkdir()
-    msgs = pd.DataFrame({"value": [
+    log = PartitionedLogWriter(str(src), n_partitions=2)
+    values = [
         f"{'session':<16}{'1700000000000':<16}" + " " * 32 + f"payload-{i}"
         for i in range(20)
-    ] + [f"{'other':<16}{'1700000000000':<16}" + " " * 32 + "x"]})
-    pq.write_table(pa.Table.from_pandas(msgs), str(src / "m.parquet"))
+    ] + [f"{'other':<16}{'1700000000000':<16}" + " " * 32 + "x"]
+    for i, v in enumerate(values):
+        log.append(i % 2, [(f"k{i}", v)])
 
     props = tmp_path / "job.properties"
     props.write_text(f"""
@@ -48,6 +53,8 @@ metric_spool_dir={tmp_path}/metrics
     assert len(bulk_lines) == 20  # session tails only
     metrics = glob.glob(f"{tmp_path}/metrics/*.json")
     assert metrics, "metric reporter produced no batches"
+    # the source acks its offsets on commit, as Pulsar's cumulative ack
+    assert committed_acks(str(src)) == {str(p): log.hwm(p) for p in range(2)}
 
 
 def test_stop_and_replace_cancels_then_resubmits(spark, tmp_path):

@@ -69,3 +69,4 @@ def test_oracle_keys_subset_of_queries():
     o = e.oracle_sql()
     assert set(o) <= set(q)
     assert len(q) == len(_SPECS)
+    assert list(q) == list(all_queries())

@@ -145,7 +145,7 @@ def test_pipeline_three_way_split_end_to_end(spark, sf_dir, tmp_path):
     _write_chunks(msgs_pdf, src_dir, n_chunks=2)
 
     main_dir = str(tmp_path / "main_out")
-    bulk_dir = str(tmp_path / "bulk_spool")
+    bulk_dir = str(tmp_path / "bulk_out")
     metric_dir = str(tmp_path / "metric_spool")
 
     src = spark.readStream.schema("value string") \

@@ -452,7 +452,7 @@ def test_restart_preserves_watermark_and_state(spark, batches, delay_h,
     ckpt = os.path.join(root, "ckpt")
     os.makedirs(src_dir)
 
-    def write_batches(lo, hi):
+    def stage_batches(lo, hi):
         for i in range(lo, hi):
             p = os.path.join(src_dir, f"b{i:03d}.parquet")
             pq.write_table(
@@ -474,9 +474,9 @@ def test_restart_preserves_watermark_and_state(spark, batches, delay_h,
         q.stop()
 
     try:
-        write_batches(0, split)
+        stage_batches(0, split)
         run_once()                 # first half, then killed
-        write_batches(split, len(batches))
+        stage_batches(split, len(batches))
         run_once()                 # restart from checkpoint
         if os.path.exists(out_dir):
             rows = spark.read.parquet(out_dir).collect()
@@ -517,7 +517,7 @@ def test_session_restart_recovers_merged_state(spark, batches, gap_h,
 
     eid = 0
 
-    def write_batches(lo, hi):
+    def stage_batches(lo, hi):
         nonlocal eid
         for i in range(lo, hi):
             pdf = _events(batches[i])
@@ -542,9 +542,9 @@ def test_session_restart_recovers_merged_state(spark, batches, gap_h,
         q.stop()
 
     try:
-        write_batches(0, split)
+        stage_batches(0, split)
         run_once()
-        write_batches(split, len(batches))
+        stage_batches(split, len(batches))
         run_once()
         rows = (spark.read.parquet(out_dir).collect()
                 if os.path.exists(out_dir) else [])
@@ -658,7 +658,7 @@ def test_dedup_restart_recovers_key_state(spark, batches, delay_h, data):
     ckpt = os.path.join(root, "ckpt")
     os.makedirs(src_dir)
 
-    def write_batches(lo, hi):
+    def stage_batches(lo, hi):
         for i in range(lo, hi):
             batch = batches[i]
             pdf = _events([h for _, h in batch])
@@ -707,9 +707,9 @@ def test_dedup_restart_recovers_key_state(spark, batches, delay_h, data):
         return sorted(emitted)
 
     try:
-        write_batches(0, split)
+        stage_batches(0, split)
         run_once()
-        write_batches(split, len(batches))
+        stage_batches(split, len(batches))
         run_once()
         rows = (spark.read.parquet(out_dir).collect()
                 if os.path.exists(out_dir) else [])
@@ -1060,7 +1060,7 @@ def test_stateful_totals_restart_matches_model(spark, batches, delay_h,
 
     eid = 0
 
-    def write_batches(lo, hi):
+    def stage_batches(lo, hi):
         nonlocal eid
         for i in range(lo, hi):
             batch = batches[i]
@@ -1092,9 +1092,9 @@ def test_stateful_totals_restart_matches_model(spark, batches, delay_h,
         q.stop()
 
     try:
-        write_batches(0, split)
+        stage_batches(0, split)
         run_once()                 # first half, then killed
-        write_batches(split, len(batches))
+        stage_batches(split, len(batches))
         run_once()                 # restart from checkpoint
         rows = (spark.read.parquet(out_dir).collect()
                 if os.path.exists(out_dir) else [])

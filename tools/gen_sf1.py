@@ -1,6 +1,6 @@
 """Scale-rehearsal data generator: synthesize an sf1-shaped dataset
-(10x sf0.1) under /tmp so bench.py can measure per-query scaling SLOPES
-instead of arguing them from plan shape (VERDICT r3 item 6).
+(10x sf0.1) under /tmp so per-query scaling slopes can be measured
+instead of argued from plan shape.
 
 NOT a correctness fixture — the driver's oracle gate stays on the real
 /root/testdata parquet. This builds 10 key-offset replicas of every
@@ -22,7 +22,9 @@ sf0.1 table (region/nation stay single — they're fixed dimensions):
 
 Usage: python tools/gen_sf1.py [--src /root/testdata/sf0.1]
                                [--out /tmp/spark_graft_sf1] [--copies 10]
-Then:  SPARK_GRAFT_SF_DIR=/tmp/spark_graft_sf1 python bench.py
+Then:  python tools/selfcheck.py --sf /tmp/spark_graft_sf1
+       (or point a tools/staged_*_oracle.py sweep's --sf at a --copies 100
+       build, e.g. /tmp/spark_graft_sf10)
 """
 
 from __future__ import annotations
