@@ -11,6 +11,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datastream_processing_demo_spark.catalog import TABLE_NAMES, table_path
+from datastream_processing_demo_spark.plans.registry import all_queries
 from datastream_processing_demo_spark.session import EngineConfig, get_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -39,6 +40,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+class QueryFrames(dict):
+    """name -> DataFrame of a registered query, built on first lookup.
+
+    Building a query can run Spark jobs (the ANN lanes train their
+    codebooks eagerly: 40-70 s each with the 8x256 books), and both
+    test_oracle_queries and test_registry_guard need every query
+    built. Running a frame does not change its schema, so the guard
+    reads the frame the oracle test ran instead of building it again."""
+
+    def __init__(self, spark, sf_dir):
+        super().__init__()
+        self._specs = all_queries()
+        self._spark = spark
+        self._sf_dir = sf_dir
+
+    def __missing__(self, name):
+        df = self[name] = self._specs[name].spark(self._spark, self._sf_dir)
+        return df
+
+
+@pytest.fixture(scope="session")
+def query_frames(spark, sf_dir):
+    return QueryFrames(spark, sf_dir)
 
 
 @pytest.fixture(scope="session")

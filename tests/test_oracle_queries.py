@@ -22,9 +22,9 @@ _SPECS = all_queries()
 
 
 @pytest.mark.parametrize("name", sorted(_SPECS))
-def test_query_matches_oracle(name, spark, sf_dir, oracle_con):
+def test_query_matches_oracle(name, query_frames, oracle_con):
     spec = _SPECS[name]
-    sdf = spec.spark(spark, sf_dir).toPandas()
+    sdf = query_frames[name].toPandas()
     if spec.oracle is None:
         # rows-only check (driver's weaker gate for non-SQL-expressible ops)
         assert sdf is not None

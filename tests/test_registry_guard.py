@@ -34,8 +34,11 @@ _COMPLEX = (T.ArrayType, T.MapType, T.StructType)
 
 
 @pytest.mark.parametrize("name", sorted(_SPECS))
-def test_output_schema_is_driver_canonicalizable(name, spark, sf_dir):
-    df = _SPECS[name].spark(spark, sf_dir)
+def test_output_schema_is_driver_canonicalizable(name, query_frames):
+    # built here, or by test_oracle_queries earlier in the session; this
+    # is the frame's last reader, so release it
+    df = query_frames[name]
+    del query_frames[name]
     bad = [f.name for f in df.schema.fields
            if isinstance(f.dataType, _COMPLEX)]
     assert not bad, (
