@@ -288,58 +288,65 @@ def _sorted_cell_structs_columns(vec_col: Column | str,
     return F.array_sort(cells)
 
 
+def _training_matrix(corpus: DataFrame, id_col: str, vec_col: str):
+    """The corpus as a (rows x dim) float64 matrix sorted by id: one
+    Arrow collect of (id, vector), the CAST(x AS DOUBLE) every engine
+    applies before training."""
+    import numpy as np
+    tbl = corpus.select(F.col(id_col).alias("id"),
+                        _as_double(vec_col).alias("v")).toArrow()
+    vecs = tbl.column("v").combine_chunks()
+    V = vecs.flatten().to_numpy().reshape(len(vecs), -1)
+    return V[np.argsort(tbl.column("id").to_numpy(), kind="stable")]
+
+
+def _lloyd_round(V, n_cells: int) -> list:
+    """One Lloyd round over the id-sorted matrix V: seeds are its
+    n_cells first rows (cell_ids 1..n_cells), every row goes to its
+    nearest seed, and each cell's mean is formed on the 1e-6 integer
+    grid. Cells left without members are dropped and the survivors keep
+    their ids. Returns [(cell_id, [float])]."""
+    import numpy as np
+    seeds = [(i + 1, v) for i, v in enumerate(V[:n_cells].tolist())]
+    # fixed row blocks keep the rows x cells distance matrix bounded
+    block = 8192
+    best = np.concatenate([_assign_cells_exact(V[i:i + block], seeds)[0]
+                           for i in range(0, len(V), block)])
+    # ROUND(x * 1e6) HALF_UP away from zero, as Spark and DuckDB round;
+    # y - trunc(y) is exact for |y| < 2^52
+    y = V * 1e6
+    t = np.trunc(y)
+    q = (t + np.sign(y) * (np.abs(y - t) >= 0.5)).astype(np.int64)
+    sums = np.zeros((len(seeds), V.shape[1]), dtype=np.int64)
+    np.add.at(sums, best, q)
+    n = np.bincount(best, minlength=len(seeds)).astype(np.float64)
+    kept = np.flatnonzero(n)
+    means = sums[kept].astype(np.float64) / (n[kept, None] * 1e6)
+    return [(int(k) + 1, m) for k, m in zip(kept, means.tolist())]
+
+
 def ivf_centroids(corpus: DataFrame, n_cells: int = 16,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
-                  lloyd_iters: int = 1) -> list:
+                  id_col: str = "vec_id", vec_col: str = "embedding") -> list:
     """IVF coarse quantizer, fully deterministic AND engine-portable:
-    seeds are the n_cells lowest-id corpus vectors, refined by
-    `lloyd_iters` rounds of assign-to-nearest + per-dimension mean.
-    Returns [(cell_id, [float])].
+    seeds are the n_cells lowest-id corpus vectors, refined by one round
+    of assign-to-nearest + per-dimension mean. Returns
+    [(cell_id, [float])], without the cells that lost every member.
 
     The mean is computed as an exact integer sum on a 1e-6 grid —
     ``CAST(SUM(CAST(ROUND(x*1e6) AS BIGINT)) AS DOUBLE) / (n * 1e6)`` —
     which is order-independent (integer adds commute) and finishes with
-    one double division, so Spark, DuckDB, and any ANSI engine produce
-    bit-identical centroids regardless of partitioning. A float AVG()
-    would be summation-order-dependent and break cross-engine equality
-    for vectors near a cell boundary.
+    one double division, so this trainer and the DuckDB oracles produce
+    bit-identical centroids. A float AVG() would be
+    summation-order-dependent and break cross-engine equality for
+    vectors near a cell boundary. The assignment makes the same
+    decisions as the dot-form fold the oracles and `_nearest_cells_expr`
+    compute (`_assign_cells_exact`).
 
-    Training cost per iteration is one shuffle of (cell_id, pos, x)
-    triples — at 100 TB you train on a sample once and persist the
-    centroids; serving never re-trains."""
-    rows = (corpus.orderBy(id_col).limit(n_cells)
-            .select(_as_double(vec_col).alias("v")).collect())
-    cent = [(i + 1, list(r["v"])) for i, r in enumerate(rows)]
-    for _ in range(lloyd_iters):
-        # Two selects, NOT one: with the nearest-cell expression and the
-        # posexplode in the same select, the projection computing
-        # cell_id lands ABOVE the Generate and the (CodegenFallback,
-        # interpreted) 16-dot-product expression re-evaluates for every
-        # exploded element — dim× the work (measured 32 s vs 0.4 s at
-        # sf0.1). Splitting puts the Project below the Generate, so the
-        # assignment is computed once per vector.
-        # spread(): the assignment pass is the CPU-heavy stage (n_cells
-        # interpreted dot products per row) and a small parquet input
-        # scans as 1-2 partitions — the r12 sf1 run of the 256-code
-        # codebooks serialized training on 2 cores for 10 minutes.
-        # Safe on values: the means are order-independent integer sums.
-        assigned = spread(corpus, min_bytes=2 << 20).select(
-            F.element_at(_nearest_cells_expr(vec_col, cent, 1), 1)
-            .alias("cell_id"),
-            _as_double(vec_col).alias("_v")
-        ).select("cell_id", F.posexplode("_v").alias("pos", "x"))
-        means = (
-            assigned.groupBy("cell_id", "pos")
-            .agg((F.sum(F.round(F.col("x") * 1e6, 0).cast("long"))
-                  .cast("double")
-                  / (F.count(F.lit(1)).cast("double") * F.lit(1e6)))
-                 .alias("m"))
-            .groupBy("cell_id")
-            .agg(F.transform(F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                             lambda s: s["m"]).alias("v"))
-            .collect())
-        cent = sorted((r["cell_id"], list(r["v"])) for r in means)
-    return cent
+    Training runs on the driver: one Arrow collect of (id, vector), then
+    numpy. The driver holds rows x dim doubles, so at 100 TB you train
+    once on a sample and persist the centroids; serving never
+    re-trains."""
+    return _lloyd_round(_training_matrix(corpus, id_col, vec_col), n_cells)
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -361,55 +368,6 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     q = queries.select(
         F.explode(_nearest_cells_expr(vec_col, cent, n_probe)).alias("cell_id"),
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    scored = (
-        c.join(F.broadcast(q), "cell_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", F.round(cosine_col("q_vec", "c_vec"), round_to))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
-
-
-def ivf_write_index(corpus: DataFrame, path: str, n_cells: int = 16,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    lloyd_iters: int = 1) -> list:
-    """Persist an IVF index: corpus vectors written partitionBy(cell_id),
-    centroids returned as metadata (persist them next to the index in a
-    real deployment). At 100 TB the index is written once; every query
-    then prunes to n_probe partition DIRECTORIES at scan time — the scan
-    never opens non-probed cells (PartitionFilters, not PushedFilters).
-    """
-    cent = ivf_centroids(corpus, n_cells, id_col, vec_col, lloyd_iters)
-    assigned = corpus.select(
-        F.element_at(_nearest_cells_expr(vec_col, cent, 1), 1).alias("cell_id"),
-        F.col(id_col), F.col(vec_col))
-    assigned.write.mode("overwrite").partitionBy("cell_id").parquet(path)
-    return cent
-
-
-def ivf_topk_persisted(spark, path: str, centroids: list,
-                       queries: DataFrame, k: int = 5, n_probe: int = 4,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       round_to: int = 6) -> DataFrame:
-    """Approximate top-k over a persisted IVF index. The probed cell set
-    (union over the query batch) lands as a partition-column filter, so
-    only those directories are scanned; the per-query candidate join
-    stays cell-equi like the in-memory `ivf_topk` and produces identical
-    results (asserted in tests/test_storage_layout.py)."""
-    q = queries.select(
-        F.explode(_nearest_cells_expr(vec_col, centroids, n_probe))
-            .alias("cell_id"),
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    probe_cells = sorted({r["cell_id"] for r in
-                          q.select("cell_id").distinct().collect()})
-    c = (spark.read.parquet(path)
-         .filter(F.col("cell_id").isin(probe_cells))
-         .select("cell_id", F.col(id_col).alias("neighbor_id"),
-                 F.col(vec_col).alias("c_vec")))
     scored = (
         c.join(F.broadcast(q), "cell_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -719,14 +677,16 @@ def semdedup_fast(corpus: DataFrame, threshold: float = 0.35,
     """The VECTORIZED spelling of `semdedup` — since r6 the registered
     sim_semdedup lane itself (oracle unchanged, VERDICT r5 task #4).
 
-    The exact lane's cell assignment and within-cell cosine both ride
-    interpreted higher-order folds (aggregate/zip_with are
-    CodegenFallback), so assignment costs O(n_cells * dim) interpreted
-    ops per ROW and the pair stage O(dim) per candidate PAIR — measured
-    at sf1 (20k vectors): 28 s at 16 cells and LINEARLY WORSE with more
+    Both lanes train their centroids with the same driver-side
+    `ivf_centroids`. After training, the exact lane's member assignment
+    and within-cell cosine both ride interpreted higher-order folds
+    (aggregate/zip_with are CodegenFallback), so assignment costs
+    O(n_cells * dim) interpreted ops per ROW and the pair stage O(dim)
+    per candidate PAIR — measured at sf1 (20k vectors, training then
+    also on the fold): 28 s at 16 cells and LINEARLY WORSE with more
     cells (124 s at 128), i.e. the paper's cells-proportional-to-corpus
-    rule is unreachable on the fold path. This twin computes the same
-    pipeline through Arrow batches: numpy assignment
+    rule is unreachable on the fold path. This twin computes the rest
+    of the pipeline through Arrow batches: numpy member assignment
     (rows x cells matmul), per-cell gram-matrix pair generation
     (exactly the dense TF-IDF lane's block discipline), then the SAME
     blocked union-find components and keep rule.
@@ -747,7 +707,7 @@ def semdedup_fast(corpus: DataFrame, threshold: float = 0.35,
     import numpy as np
     import pandas as pd
 
-    cent = ivf_centroids_fast(corpus, n_cells, id_col, vec_col)
+    cent = ivf_centroids(corpus, n_cells, id_col, vec_col)
     cell_ids = np.array([cid for cid, _ in cent], dtype=np.int64)
 
     def assign(batches):
@@ -900,70 +860,17 @@ def semdedup_fast(corpus: DataFrame, threshold: float = 0.35,
                 (F.col("rn") == 1).alias("is_kept")))
 
 
-def ivf_centroids_fast(corpus: DataFrame, n_cells: int = 16,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       lloyd_iters: int = 1) -> list:
-    """Vectorized twin of `ivf_centroids`: identical seeds, identical
-    integer-grid means (the Spark aggregate is unchanged), but the
-    assign-to-nearest step runs as a numpy rows x cells matmul in
-    mapInPandas instead of the interpreted n_cells-literal fold — the
-    training-side counterpart of `semdedup_fast`'s argument. Tests pin
-    centroid equality with the exact spelling on the driver fixtures."""
-    import numpy as np
-    import pandas as pd
-
-    rows = (corpus.orderBy(id_col).limit(n_cells)
-            .select(_as_double(vec_col).alias("v")).collect())
-    cent = [(i + 1, list(r["v"])) for i, r in enumerate(rows)]
-    for _ in range(lloyd_iters):
-        cur = list(cent)
-        cell_ids = np.array([cid for cid, _ in cur], dtype=np.int64)
-
-        def assign(batches, _cur=cur, _ids=cell_ids):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["_v"].to_numpy())
-                # fold-exact decisions (banded matmul screen) so the
-                # trained means match the exact lane's bit-for-bit even
-                # for vectors near a cell boundary
-                best, _ = _assign_cells_exact(V, _cur)
-                yield pd.DataFrame({"cell_id": _ids[best],
-                                    "_v": pdf["_v"]})
-
-        # width from input size: same 256 KB/task rule as semdedup_fast
-        # (Lloyd means are order-independent integer-grid sums, so
-        # width cannot change the trained centroids)
-        assigned = (spread(corpus, bytes_per_task=256 << 10)
-                    .select(_as_double(vec_col).alias("_v"))
-                    .mapInPandas(assign,
-                                 schema="cell_id int, _v array<double>")
-                    .select("cell_id", F.posexplode("_v").alias("pos", "x")))
-        means = (
-            assigned.groupBy("cell_id", "pos")
-            .agg((F.sum(F.round(F.col("x") * 1e6, 0).cast("long"))
-                  .cast("double")
-                  / (F.count(F.lit(1)).cast("double") * F.lit(1e6)))
-                 .alias("m"))
-            .groupBy("cell_id")
-            .agg(F.transform(F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                             lambda s: s["m"]).alias("v"))
-            .collect())
-        cent = sorted((r["cell_id"], list(r["v"])) for r in means)
-    return cent
-
-
 def auto_n_cells(n_rows: int, target_cell_size: int = 256,
                  min_cells: int = 4, max_cells: int = 65536) -> int:
     """SemDeDup/IVF cell count sized to the corpus — the paper's
     cells-proportional-to-corpus rule (11k clusters for LAION-440M) as
     code: n_cells = ceil(n / target_cell_size), clamped. Per-cell pair
     work is quadratic in cell size, so a FIXED n_cells melts as the
-    corpus grows; with `semdedup_fast`'s matmul assignment the cell
-    count is finally free to follow this rule (the interpreted-fold
-    assignment of the exact lane is O(n_cells) per row and was the
-    binding constraint — measured at sf1: exact lane 28 s at 16 cells,
-    124 s at 128; fast lane ~5 s at both)."""
+    corpus grows. Assignment by matmul (`ivf_centroids` for training,
+    `semdedup_fast` for members) leaves the cell count free to follow
+    this rule; the interpreted-fold member assignment of the exact lane
+    is O(n_cells) per row (measured at sf1 when training also ran on the
+    fold: 28 s at 16 cells, 124 s at 128)."""
     return max(min_cells, min(max_cells, -(-n_rows // target_cell_size)))
 
 
@@ -986,23 +893,17 @@ def auto_n_cells(n_rows: int, target_cell_size: int = 256,
 
 
 def pq_codebooks(corpus: DataFrame, m_sub: int = 4, k_codes: int = 16,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 lloyd_iters: int = 1, dim: int = 64) -> list:
+                 id_col: str = "vec_id", vec_col: str = "embedding") -> list:
     """Per-subspace codebooks: [(sub_id, [(code_id, [float])])].
-    Training reuses the IVF quantizer per sliced subvector frame — at
-    100 TB codebooks train once on a sample (metadata scale: m_sub x
-    k_codes x dim/m_sub floats) and persist next to the code table."""
-    sub_len = dim // m_sub
-    books = []
-    for s in range(m_sub):
-        sub = corpus.select(
-            F.col(id_col),
-            F.slice(_as_double(vec_col), s * sub_len + 1, sub_len)
-            .alias("_sv"))
-        books.append((s, ivf_centroids(sub, n_cells=k_codes, id_col=id_col,
-                                       vec_col="_sv",
-                                       lloyd_iters=lloyd_iters)))
-    return books
+    Training runs the IVF quantizer's Lloyd round on each column slice
+    of one collected training matrix, so the job count does not grow
+    with m_sub. At 100 TB codebooks train once on a sample (metadata
+    scale: m_sub x k_codes x dim/m_sub floats) and persist next to the
+    code table."""
+    V = _training_matrix(corpus, id_col, vec_col)
+    sub_len = V.shape[1] // m_sub
+    return [(s, _lloyd_round(V[:, s * sub_len:(s + 1) * sub_len], k_codes))
+            for s in range(m_sub)]
 
 
 def _pq_lut_expr(sub_col: str, cent: list) -> Column:
@@ -1075,8 +976,7 @@ def pq_codes(corpus: DataFrame, books: list, id_col: str = "vec_id",
     Two forms, picked by codebook size (PQ_LITERAL_ENTRY_CAP):
     - literal: a shuffle-free projection against literal codebooks,
       exactly like the IVF cell assignment (two selects so the sliced
-      subvectors are computed once below the assignment expressions —
-      the ivf_centroids projection-above-Generate lesson);
+      subvectors are computed once below the assignment expressions);
     - joined: subvectors stacked to (id, s, sv) rows, broadcast-joined
       to the codebook TABLE, nearest codeword picked by
       MIN(struct(l2, code_id)) — lexicographic struct MIN is the same
@@ -1296,77 +1196,6 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     for s, _ in books[1:]:
         score = score + F.element_at(F.col(f"lut{s}"), F.col(f"c{s}"))
     scored = (coded.join(F.broadcast(probes), "cell_id")
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .withColumn("score", F.round(score, round_to)))
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                          "neighbor_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "score", "rank"))
-
-
-def ivf_pq_write_index(corpus: DataFrame, path: str, n_cells: int = 16,
-                       m_sub: int = 4, k_codes: int = 16,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> tuple:
-    """Persist an IVF-PQ index: the CODE table (id + m_sub byte codes —
-    the raw vectors are gone) written partitionBy(cell_id); centroids +
-    codebooks returned as metadata (persist them next to the index in a
-    real deployment — n_cells x dim + m_sub x k_codes x dim/m_sub
-    floats). This is the 100 TB at-rest shape: storage is corpus/64,
-    and serving scans only the probed cell DIRECTORIES
-    (PartitionFilters), paying m_sub LUT adds per code."""
-    cent = ivf_centroids(corpus, n_cells, id_col, vec_col)
-    books = pq_codebooks(corpus, m_sub=m_sub, k_codes=k_codes,
-                         id_col=id_col, vec_col=vec_col)
-    sub_len = len(books[0][1][0][1])
-    sliced = corpus.select(
-        F.col(id_col), _as_double(vec_col).alias("_v"),
-        *[F.slice(_as_double(vec_col), s * sub_len + 1, sub_len)
-          .alias(f"_sv{s}") for s, _ in books])
-    coded = sliced.select(
-        F.col(id_col),
-        F.element_at(_nearest_cells_expr("_v", cent, 1), 1)
-        .alias("cell_id"),
-        *[F.element_at(_nearest_cells_expr(f"_sv{s}", cb, 1), 1)
-          .alias(f"c{s}") for s, cb in books])
-    coded.write.mode("overwrite").partitionBy("cell_id").parquet(path)
-    return cent, books
-
-
-def ivf_pq_topk_persisted(spark, path: str, cent: list, books: list,
-                          queries: DataFrame, k: int = 5, n_probe: int = 4,
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          round_to: int = 6) -> DataFrame:
-    """ADC top-k over a persisted IVF-PQ index: the query batch's probed
-    cell set lands as a partition-column filter (only those directories
-    are scanned — the raw corpus is never touched), then the same
-    broadcast-LUT x code-scan serving as the in-memory `ivf_pq_topk`,
-    producing identical results (asserted in tests/test_pq.py)."""
-    sub_len = len(books[0][1][0][1])
-    q_sliced = queries.select(
-        F.col(id_col).alias("query_id"),
-        _nearest_cells_expr(_as_double(vec_col), cent, n_probe)
-        .alias("_cells"),
-        *[F.slice(_as_double(vec_col), s * sub_len + 1, sub_len)
-          .alias(f"_qs{s}") for s, _ in books])
-    luts = q_sliced.select(
-        "query_id", "_cells",
-        *[_pq_lut_expr(f"_qs{s}", cb).alias(f"lut{s}")
-          for s, cb in books])
-    probes = luts.select(
-        "query_id", F.explode("_cells").alias("cell_id"),
-        *[f"lut{s}" for s, _ in books])
-    probe_cells = sorted({r["cell_id"] for r in
-                          probes.select("cell_id").distinct().collect()})
-    codes = (spark.read.parquet(path)
-             .filter(F.col("cell_id").isin(probe_cells))
-             .withColumnRenamed(id_col, "neighbor_id"))
-    score = F.element_at(F.col("lut0"), F.col("c0"))
-    for s, _ in books[1:]:
-        score = score + F.element_at(F.col(f"lut{s}"), F.col(f"c{s}"))
-    scored = (codes.join(F.broadcast(probes), "cell_id")
               .filter(F.col("query_id") != F.col("neighbor_id"))
               .withColumn("score", F.round(score, round_to)))
     w = W.partitionBy("query_id").orderBy(F.col("score").desc(),

@@ -95,79 +95,3 @@ def batch_user_totals(events: DataFrame) -> DataFrame:
              F.sum(F.when(F.col("event_type") == "purchase", 1)
                    .otherwise(0)).alias("n_purchases"))
     )
-
-
-# --- transformWithStateInPandas (Spark 4 arbitrary-state API) ----------
-
-try:  # the API is new in Spark 4.0; keep the module importable elsewhere
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class LastNAverageProcessor(StatefulProcessor):
-        """Keeps each user's last N events (by event_id) in ListState and
-        emits the rolling average after every batch — unbounded-lifetime
-        'last N' semantics that no watermark-bounded window can express.
-        State is N fixed rows per key: O(keys), never O(events)."""
-
-        N = 3
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._recent = handle.getListState(
-                "recent", "eid bigint, cents bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            buf = [tuple(r) for r in self._recent.get()]
-            for pdf in rows:
-                cents = pdf["value"].mul(100).round().astype("int64")
-                buf.extend(zip(pdf["event_id"].astype("int64"), cents))
-            # keep the N latest by event_id: associative across any batch
-            # split, so the final state is batch-split-independent
-            buf = sorted(buf)[-self.N:]
-            self._recent.put(buf)
-            avg = sum(c for _, c in buf) / len(buf) / 100.0
-            yield pd.DataFrame({
-                "user_id": [key[0]],
-                "last_eid": [buf[-1][0]],
-                "lastn_avg": [avg],
-            })
-
-        def close(self) -> None:
-            pass
-
-    def rolling_lastn_avg(events: DataFrame) -> DataFrame:
-        """Per-user rolling average over the last 3 events (by event_id),
-        via the Spark 4 transformWithStateInPandas arbitrary-state API.
-
-        NOTE: executing this operator requires the `protobuf` package
-        (Spark's transformWithState runner speaks protobuf to the JVM);
-        in environments without it the query fails at start — the
-        equivalence test auto-skips there. applyInPandasWithState above
-        covers the same capability with no extra dependency."""
-        return (
-            events.groupBy("user_id")
-            .transformWithStateInPandas(
-                LastNAverageProcessor(),
-                outputStructType="user_id bigint, last_eid bigint, lastn_avg double",
-                outputMode="Update",
-                timeMode="None",
-            )
-        )
-except ImportError:  # pragma: no cover - older Spark
-    pass
-
-
-def batch_lastn_avg(events: DataFrame, n: int = 3) -> DataFrame:
-    """Batch golden for rolling_lastn_avg's FINAL emission per user."""
-    from pyspark.sql import Window as W
-    cents = F.round(F.col("value") * 100).cast("long")
-    w = W.partitionBy("user_id").orderBy(F.col("event_id").desc())
-    lastn = (events.select("user_id", "event_id", cents.alias("cents"))
-             .withColumn("rn", F.row_number().over(w))
-             .filter(F.col("rn") <= n))
-    return lastn.groupBy("user_id").agg(
-        F.max("event_id").alias("last_eid"),
-        (F.sum("cents").cast("double") / F.count(F.lit(1)) / 100.0)
-        .alias("lastn_avg"),
-    )

@@ -45,8 +45,8 @@ def sf_dir():
 class QueryFrames(dict):
     """name -> DataFrame of a registered query, built on first lookup.
 
-    Building a query can run Spark jobs (the ANN lanes train their
-    codebooks eagerly: 40-70 s each with the 8x256 books), and both
+    Building a query can run Spark jobs (the ANN lanes collect the
+    corpus to train their centroids and codebooks eagerly), and both
     test_oracle_queries and test_registry_guard need every query
     built. Running a frame does not change its schema, so the guard
     reads the frame the oracle test ran instead of building it again."""

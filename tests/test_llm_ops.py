@@ -30,8 +30,10 @@ from datastream_processing_demo_spark.operators.dedup import (
 from datastream_processing_demo_spark.operators.multimodal import decode_image_real
 from datastream_processing_demo_spark.operators.similarity import (
     bruteforce_topk,
+    ivf_centroids,
     ivf_topk,
     lsh_topk,
+    pq_codebooks,
 )
 
 
@@ -931,13 +933,60 @@ def test_semdedup_fast_matches_exact(spark, sf_dir):
     assert a == b
 
 
-def test_ivf_centroids_fast_matches_exact(spark, sf_dir):
-    from datastream_processing_demo_spark.operators.similarity import (
-        ivf_centroids,
-        ivf_centroids_fast,
-    )
+def _duckdb_ivf_training(emb, n_cells):
+    """Centroids trained in DuckDB by the sim_ivf_topk oracle's own
+    training CTEs (seeds ... cvec) over the rows of `emb`."""
+    import duckdb
+
+    from datastream_processing_demo_spark.plans.registry import all_queries
+    sql = all_queries()["sim_ivf_topk"].oracle
+    training = sql[:sql.index("cassign AS (")].rstrip().rstrip(",")
+    assert training.count("LIMIT 16") == 1
+    training = training.replace("LIMIT 16", f"LIMIT {n_cells}")
+    con = duckdb.connect()
+    try:
+        con.register("embeddings", emb.toArrow())
+        rows = con.execute(
+            f"{training} SELECT cell_id, cm FROM cvec ORDER BY cell_id"
+        ).fetchall()
+    finally:
+        con.close()
+    return [(cid, list(cm)) for cid, cm in rows]
+
+
+def _fixture_16_cells(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    assert ivf_centroids(emb, 16) == ivf_centroids_fast(emb, 16)
+    return ivf_centroids(emb, 16), emb, 16
+
+
+def _pq_8x256_subspace(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    s, sub_len = 3, 8
+    sub = emb.select(
+        "vec_id",
+        F.slice("embedding", s * sub_len + 1, sub_len).alias("embedding"))
+    return pq_codebooks(emb, m_sub=8, k_codes=256)[s][1], sub, 256
+
+
+def _grid_half_ties(spark, sf_dir):
+    """Components at exact -k.5 points of the 1e-6 grid, which the
+    fixture embeddings never hold: ROUND there is away from zero in
+    both engines (-2.5 -> -3), not toward +inf."""
+    assert -2.5e-6 * 1e6 == -2.5 and -1.25e-5 * 1e6 == -12.5
+    rows = [(1, [1.0, 0.0, -2.5e-6]), (2, [0.0, 1.0, 2.5e-6]),
+            (3, [1.0, 0.1, -1.5e-6]), (4, [0.1, 1.0, -1.25e-5]),
+            (5, [0.9, -5e-7, -3.5e-6])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return ivf_centroids(emb, 2), emb, 2
+
+
+@pytest.mark.parametrize("case", [_fixture_16_cells, _pq_8x256_subspace,
+                                  _grid_half_ties],
+                         ids=["fixture_16_cells", "pq_8x256_subspace",
+                              "grid_half_ties"])
+def test_ivf_centroids_match_duckdb_training(spark, sf_dir, case):
+    got, emb, n_cells = case(spark, sf_dir)
+    assert got == _duckdb_ivf_training(emb, n_cells)
 
 
 def test_auto_n_cells_sizing_rule():

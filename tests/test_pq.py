@@ -45,6 +45,26 @@ def test_codebook_geometry_and_code_range(spark):
         assert 1 <= stats[f"lo{s}"] and stats[f"hi{s}"] <= 16
 
 
+def test_codebook_training_is_one_collect(spark):
+    """Training collects the corpus once and slices it per subspace, so
+    the 8x256 books run no more Spark jobs than the 4x16 ones."""
+    emb = load_table(spark, SF, "embeddings")
+    sc = spark.sparkContext
+
+    def jobs(group, **geometry):
+        sc.setJobGroup(group, group)
+        try:
+            pq_codebooks(emb, **geometry)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    demo = jobs("pq_codebooks_4x16")
+    prod = jobs("pq_codebooks_8x256", m_sub=8, k_codes=256)
+    assert 1 <= demo and prod <= demo, (demo, prod)
+
+
 def test_adc_recall_against_exact_inner_product(spark):
     """PQ is lossy by design, and the synthetic fixture is its worst
     case: i.i.d.-random 64-dim vectors have no low-dimensional
@@ -157,40 +177,6 @@ def test_ivf_pq_prunes_candidates(spark):
     pruned = ivf_pq_topk(emb, queries, k=10**9).count()
     assert pruned < 10 * (n - 1) * 0.5, \
         "cell filter pruned less than half the corpus across 10 queries"
-
-
-def test_ivf_pq_persisted_index_prunes_partitions(spark, tmp_path):
-    """The 100 TB at-rest shape made executable (r11): the CODE table
-    (no raw vectors) persists partitionBy(cell_id); a query batch's
-    probed cells become a partition-column filter (PartitionFilters on
-    cell_id — directory pruning, not row filtering), and results equal
-    the in-memory ivf_pq_topk."""
-    from datastream_processing_demo_spark.operators.similarity import (
-        ivf_pq_topk,
-        ivf_pq_topk_persisted,
-        ivf_pq_write_index,
-    )
-    emb = load_table(spark, SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    idx = str(tmp_path / "ivf_pq_index")
-    cent, books = ivf_pq_write_index(emb, idx, n_cells=16)
-
-    got_df = ivf_pq_topk_persisted(spark, idx, cent, books, queries,
-                                   k=5, n_probe=4)
-    plan = got_df._sc._jvm.PythonSQLUtils.explainString(
-        got_df._jdf.queryExecution(), "formatted")
-    pf = [seg.split("\n")[0] for seg in plan.split("PartitionFilters:")[1:]]
-    assert any("cell_id" in p for p in pf), \
-        f"probe cells must prune at the directory level: {pf}"
-    # the scanned schema is codes-only — the raw vector column is gone
-    assert "embedding" not in plan.split("ReadSchema:")[1].split("\n")[0]
-
-    want = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["score"])
-            for r in ivf_pq_topk(emb, queries, k=5, n_cells=16,
-                                 cent=cent, books=books).collect()}
-    got = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["score"])
-           for r in got_df.collect()}
-    assert got == want, "persisted IVF-PQ must match in-memory serving"
 
 
 def test_pq_literal_and_joined_forms_are_bit_identical(spark):

@@ -1,7 +1,6 @@
 """spread() width rules (r12-opt): blanket widening, the min_bytes
 size gate, and the scale-adaptive bytes_per_task clamp used by the
-Arrow/numpy lanes (semdedup_fast, ivf_centroids_fast,
-bruteforce_topk_pandas)."""
+Arrow/numpy lanes (semdedup_fast, bruteforce_topk_pandas)."""
 
 from __future__ import annotations
 

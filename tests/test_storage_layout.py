@@ -124,37 +124,6 @@ def test_dynamic_partition_pruning_from_dim_filter(spark, sf_dir, tmp_path):
     assert got == want
 
 
-def test_ivf_persisted_index_prunes_partitions(spark, sf_dir, tmp_path):
-    # The ANN serving pattern at 100 TB: the IVF index is parquet
-    # partitioned by cell_id; a query batch's probed cells become a
-    # partition-column filter, so the scan opens ONLY the probed cell
-    # directories (PartitionFilters with cell_id, and fewer input files
-    # than cells) — and results must equal the in-memory ivf_topk.
-    from datastream_processing_demo_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_persisted,
-        ivf_write_index,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    idx = str(tmp_path / "ivf_index")
-    cent = ivf_write_index(emb, idx, n_cells=16)
-
-    got_df = ivf_topk_persisted(spark, idx, cent, queries, k=5, n_probe=4)
-    plan = _explain(got_df)
-    pf = [seg.split("\n")[0] for seg in plan.split("PartitionFilters:")[1:]]
-    assert any("cell_id" in p for p in pf), \
-        f"probe cells must prune at the directory level: {pf}"
-
-    want = {(r["query_id"], r["rank"]): r["neighbor_id"]
-            for r in ivf_topk(emb, queries, k=5, n_cells=16, n_probe=4)
-            .collect()}
-    got = {(r["query_id"], r["rank"]): r["neighbor_id"]
-           for r in got_df.collect()}
-    assert got == want, "persisted-index ANN must match in-memory ivf_topk"
-
-
 def test_footer_stats_pushes_aggregates(spark, sf_dir):
     """COUNT/MIN/MAX must be answered by the scan (PushedAggregation)
     under the helper's scoped DSv2 configs, match a plain full-scan

@@ -368,31 +368,6 @@ def test_checkpoint_recovery_exactly_once_file_sink(spark, events_pdf, tmp_path)
     assert spark.read.parquet(out["main"]).count() == half + 10
 
 
-def test_transform_with_state_lastn_avg(spark, stream_dir):
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState runner needs protobuf")
-    from datastream_processing_demo_spark.streaming.stateful import (
-        batch_lastn_avg,
-        rolling_lastn_avg,
-    )
-
-    src = (spark.readStream.schema(EVENTS)
-           .option("maxFilesPerTrigger", 1).parquet(stream_dir))
-    _run_to_memory(rolling_lastn_avg(src), "lastn_stream", "update")
-    # final emission per user = the row with the highest last_eid
-    got = spark.sql("""
-        SELECT user_id, last_eid, lastn_avg FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY user_id ORDER BY last_eid DESC) AS rn
-            FROM lastn_stream) WHERE rn = 1
-    """).toPandas().sort_values("user_id", ignore_index=True)
-    batch = batch_lastn_avg(
-        spark.read.schema(EVENTS).parquet(stream_dir)) \
-        .toPandas().sort_values("user_id", ignore_index=True)
-    assert got.equals(batch), "final last-N state != batch computation"
-
-
 def test_stream_static_broadcast_join(spark, sf_dir, stream_dir):
     """Streaming events joined to a STATIC dimension (broadcast per
     micro-batch, no stream state at all) — the enrich-on-ingest shape."""
