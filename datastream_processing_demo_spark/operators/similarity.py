@@ -312,11 +312,7 @@ def _lloyd_round(V, n_cells: int) -> list:
     block = 8192
     best = np.concatenate([_assign_cells_exact(V[i:i + block], seeds)[0]
                            for i in range(0, len(V), block)])
-    # ROUND(x * 1e6) HALF_UP away from zero, as Spark and DuckDB round;
-    # y - trunc(y) is exact for |y| < 2^52
-    y = V * 1e6
-    t = np.trunc(y)
-    q = (t + np.sign(y) * (np.abs(y - t) >= 0.5)).astype(np.int64)
+    q = _round_half_up_int64(V * 1e6)
     sums = np.zeros((len(seeds), V.shape[1]), dtype=np.int64)
     np.add.at(sums, best, q)
     n = np.bincount(best, minlength=len(seeds)).astype(np.float64)
@@ -611,16 +607,14 @@ def _seq_dot_rows(V, W):
 
 
 def _round_half_up_int64(y):
-    """Exact HALF_UP-to-integer of a float64 array — the same decision
-    Spark's BigDecimal F.round(y, 0) and DuckDB's ROUND(y) make. `y -
-    floor(y)` is exact for |y| < 2^52, so the 0.5 comparison has no FP
-    hazard (np.floor(y + 0.5) silently rounds up for y one ULP below a
-    .5 boundary). Half-integer NEGATIVE y would differ (away-from-zero
-    vs this +1 rule) but only arises here from ~1e-10 cancellation noise
-    in nonneg L2 distances, never at a true -.5 grid point."""
+    """Exact HALF_UP-to-integer of a float64 array, ties away from zero
+    (-2.5 -> -3) — the same decision Spark's BigDecimal F.round(y, 0)
+    and DuckDB's ROUND(y) make. `y - trunc(y)` is exact for |y| < 2^52,
+    so the 0.5 comparison has no FP hazard (np.floor(y + 0.5) silently
+    rounds up for y one ULP below a .5 boundary)."""
     import numpy as np
-    r = np.floor(y)
-    return (r + (y - r >= 0.5)).astype(np.int64)
+    t = np.trunc(y)
+    return (t + np.sign(y) * (np.abs(y - t) >= 0.5)).astype(np.int64)
 
 
 def _assign_cells_exact(V, cent, band: float = 1e-6):
