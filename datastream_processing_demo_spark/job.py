@@ -101,8 +101,6 @@ def run(argv: list[str] | None = None, await_termination: bool = True):
     ))
     trigger = {"processingTime": f"{int(cfg['checkpoint_interval'])} milliseconds"}
     run_once = cfg.get("run_once", "false").lower() == "true"
-    if run_once:
-        trigger = {"availableNow": True}
 
     spark.dataSource.register(PartitionedLogDataSource)
 
@@ -125,14 +123,21 @@ def run(argv: list[str] | None = None, await_termination: bool = True):
     # launcher's detect-cancel-resubmit); the checkpoint carries
     # offsets/state into the new query incarnation.
     query = stop_and_replace(spark, "datastream-pipeline", start_fn)
-    if await_termination:
-        query.awaitTermination()
-        if run_once and query.lastProgress is not None:
+    if run_once:
+        # A drain, not availableNow: Spark runs a Python source's
+        # availableNow as one batch, which after a crash is only the
+        # planned but uncommitted batch. processAllAvailable returns once
+        # every offset present at the call is committed.
+        query.processAllAvailable()
+        query.stop()
+        if query.lastProgress is not None:
             # Spark acks a batch's offsets when it plans the next batch,
             # which a drain-and-stop run never does: ack the last batch,
             # whose checkpoint committed before the query stopped.
             progress = json.loads(query.lastProgress.json)
             ack(cfg["source_dir"], progress["sources"][0]["endOffset"])
+    elif await_termination:
+        query.awaitTermination()
     return query
 
 

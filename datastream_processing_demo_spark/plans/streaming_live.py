@@ -14,11 +14,14 @@ SURVEY.md §2.2 "exact via replayed batch").
 
 At scale the same topology is the production shape: log-offset source,
 watermark bounding state, the state store session.py documents, sink
-swapped for parquet/foreachBatch. The memory sink is test-only.
+swapped for parquet/foreachBatch. The memory sink is test-only. Each
+stateful query starts with at most one state-store partition per task
+slot (`_slot_wide_state`).
 """
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import os
 
@@ -83,6 +86,43 @@ def _promote_chunk_dirs(out: str) -> list[str]:
     return chunks
 
 
+@contextlib.contextmanager
+def _slot_wide_state(spark: SparkSession):
+    """Start queries inside this with at most one shuffle partition, so
+    one state-store partition, per task slot. A fresh checkpoint fixes
+    its state width at start(). get_session's width is the slot count
+    already, but a caller's session left at Spark's default of 200 paid
+    200 state tasks per micro-batch: stream_live_stateful_totals at
+    sf0.01 on a vanilla local[4] session took 108 s instead of 10 s."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    slots = spark.sparkContext.defaultParallelism
+    spark.conf.set(key, str(min(int(old), slots)))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _await_drain(q, label: str) -> None:
+    """Wait up to 300 s for an availableNow query to drain its source;
+    stop it and raise if it has not."""
+    if not q.awaitTermination(timeout=300):
+        q.stop()
+        raise RuntimeError(f"{label} did not finish in 300s")
+
+
+def _drain_to_memory(df: DataFrame, label: str, mode: str) -> DataFrame:
+    """Drain `df` (one micro-batch per source file under availableNow)
+    into a fresh memory table and return that table."""
+    name = f"{label}_{next(_NAMES)}"
+    with _slot_wide_state(df.sparkSession):
+        q = (df.writeStream.format("memory").queryName(name)
+             .outputMode(mode).trigger(availableNow=True).start())
+    _await_drain(q, label)
+    return df.sparkSession.table(name)
+
+
 def _stream_chunk_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 5) -> str:
     """Materialize events as n ts-range-ordered parquet chunks
     (idempotent): the replayable stand-in for a log source, one file per
@@ -139,24 +179,7 @@ def stream_live_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (spark.readStream.schema(EVENTS)
            .option("maxFilesPerTrigger", "1").parquet(src_dir))
     agg = tumbling_counts(src, width="6 hours", watermark="1 hour")
-    name = f"stream_live_tumbling_{next(_NAMES)}"
-    # State-store task count is frozen per checkpoint at query start
-    # from shuffle.partitions; the aggregate state here is tiny (windows
-    # x event types), so pin a narrow width for THIS fresh checkpoint —
-    # a wide default (200) would pay 5 micro-batches x 200 state tasks
-    # of pure scheduling. Production sizes this to state volume.
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True).start())
-        finished = q.awaitTermination(timeout=300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    if not finished:
-        q.stop()
-        raise RuntimeError("stream_live_tumbling did not finish in 300s")
-    return spark.table(name)
+    return _drain_to_memory(agg, "stream_live_tumbling", "complete")
 
 
 @query(
@@ -188,19 +211,7 @@ def stream_live_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (spark.readStream.schema(EVENTS)
            .option("maxFilesPerTrigger", "1").parquet(src_dir))
     agg = tumbling_counts(src, width="6 hours", watermark="1 hour")
-    name = f"stream_live_tumbling_append_{next(_NAMES)}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("append").trigger(availableNow=True).start())
-        finished = q.awaitTermination(timeout=300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    if not finished:
-        q.stop()
-        raise RuntimeError("stream_live_tumbling_append did not finish in 300s")
-    return spark.table(name)
+    return _drain_to_memory(agg, "stream_live_tumbling_append", "append")
 
 
 def _stream_chunk_dir_late(spark: SparkSession, sf_dir: str,
@@ -290,19 +301,7 @@ def stream_live_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (spark.readStream.schema(EVENTS)
            .option("maxFilesPerTrigger", "1").parquet(src_dir))
     agg = tumbling_counts(src, width="6 hours", watermark="1 hour")
-    name = f"stream_live_late_drop_{next(_NAMES)}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("append").trigger(availableNow=True).start())
-        finished = q.awaitTermination(timeout=300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    if not finished:
-        q.stop()
-        raise RuntimeError("stream_live_late_drop did not finish in 300s")
-    return spark.table(name)
+    return _drain_to_memory(agg, "stream_live_late_drop", "append")
 
 
 def _message_chunk_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
@@ -364,25 +363,16 @@ def pipeline_live_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .collect()[0]["v"])
     src = (spark.readStream.schema("value string")
            .option("maxFilesPerTrigger", "1").parquet(src_dir))
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = run_pipeline_stream(
-            src,
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            main_out_dir=os.path.join(work, "main"),
-            bulk_writer=HttpBulkWriter(os.path.join(work, "bulk"),
-                                       batch_size=1000),
-            metric_reporter=MetricAvgReporter(os.path.join(work, "metrics")),
-            now_ms=F.lit(frozen_now),
-            trigger={"availableNow": True},
-        )
-        finished = q.awaitTermination(timeout=300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    if not finished:
-        q.stop()
-        raise RuntimeError("pipeline_live_multi_sink did not finish in 300s")
+    _await_drain(run_pipeline_stream(
+        src,
+        checkpoint_dir=os.path.join(work, "ckpt"),
+        main_out_dir=os.path.join(work, "main"),
+        bulk_writer=HttpBulkWriter(os.path.join(work, "bulk"),
+                                   batch_size=1000),
+        metric_reporter=MetricAvgReporter(os.path.join(work, "metrics")),
+        now_ms=F.lit(frozen_now),
+        trigger={"availableNow": True},
+    ), "pipeline_live_multi_sink")
     return (spark.read.json(os.path.join(work, "bulk"))
             .select(F.col("doc").alias("payload")))
 
@@ -452,19 +442,7 @@ def stream_live_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (spark.readStream.schema(EVENTS)
            .option("maxFilesPerTrigger", "1").parquet(src_dir))
     deduped = dedup_within_watermark(src, watermark="40 days")
-    name = f"stream_live_dedup_{next(_NAMES)}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (deduped.writeStream.format("memory").queryName(name)
-             .outputMode("append").trigger(availableNow=True).start())
-        finished = q.awaitTermination(timeout=300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    if not finished:
-        q.stop()
-        raise RuntimeError("stream_live_dedup did not finish in 300s")
-    return spark.table(name).select(
+    return _drain_to_memory(deduped, "stream_live_dedup", "append").select(
         "event_id", "ts", "user_id", "event_type", "value", "props")
 
 
@@ -505,19 +483,7 @@ def stream_live_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (spark.readStream.schema(EVENTS)
            .option("maxFilesPerTrigger", "1").parquet(src_dir))
     sess = session_windows(src, gap="30 minutes", watermark="1 hour")
-    name = f"stream_live_session_{next(_NAMES)}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (sess.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True).start())
-        finished = q.awaitTermination(timeout=300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    if not finished:
-        q.stop()
-        raise RuntimeError("stream_live_session did not finish in 300s")
-    return spark.table(name)
+    return _drain_to_memory(sess, "stream_live_session", "complete")
 
 
 @query(
@@ -568,19 +534,7 @@ def stream_live_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "view_ts", "purchase_ts",
                 F.round(F.col("p_value") * 100).cast("long")
                     .alias("purchase_cents")))
-    name = f"stream_live_stream_join_{next(_NAMES)}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (joined.writeStream.format("memory").queryName(name)
-             .outputMode("append").trigger(availableNow=True).start())
-        finished = q.awaitTermination(timeout=300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    if not finished:
-        q.stop()
-        raise RuntimeError("stream_live_stream_join did not finish in 300s")
-    return spark.table(name)
+    return _drain_to_memory(joined, "stream_live_stream_join", "append")
 
 
 @query(
@@ -641,19 +595,7 @@ def stream_live_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_outer")
         .select(F.col("v_user").alias("user_id"), "view_id", "view_ts",
                 "purchase_id", "purchase_ts"))
-    name = f"stream_live_outer_join_{next(_NAMES)}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (joined.writeStream.format("memory").queryName(name)
-             .outputMode("append").trigger(availableNow=True).start())
-        finished = q.awaitTermination(timeout=300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    if not finished:
-        q.stop()
-        raise RuntimeError("stream_live_outer_join did not finish in 300s")
-    return spark.table(name)
+    return _drain_to_memory(joined, "stream_live_outer_join", "append")
 
 
 @query(
@@ -703,24 +645,18 @@ def stream_live_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = (spark.readStream.schema(EVENTS)
                .option("maxFilesPerTrigger", "1").parquet(src_dir))
         agg = tumbling_counts(src, width="6 hours", watermark="1 hour")
-        q = (agg.writeStream.format("parquet").option("path", sink)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        if not q.awaitTermination(timeout=300):
-            q.stop()
-            raise RuntimeError("stream_live_restart incarnation timed out")
+        with _slot_wide_state(spark):
+            q = (agg.writeStream.format("parquet").option("path", sink)
+                 .option("checkpointLocation", ckpt)
+                 .outputMode("append").trigger(availableNow=True).start())
+        _await_drain(q, "stream_live_restart")
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for f in files[:3]:
-            shutil.copy(os.path.join(chunks_src, f), os.path.join(src_dir, f))
-        run_incarnation()                      # incarnation 1: drains 3 chunks
-        for f in files[3:]:
-            shutil.copy(os.path.join(chunks_src, f), os.path.join(src_dir, f))
-        run_incarnation()                      # incarnation 2: resumes from WAL
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    for f in files[:3]:
+        shutil.copy(os.path.join(chunks_src, f), os.path.join(src_dir, f))
+    run_incarnation()                          # incarnation 1: drains 3 chunks
+    for f in files[3:]:
+        shutil.copy(os.path.join(chunks_src, f), os.path.join(src_dir, f))
+    run_incarnation()                          # incarnation 2: resumes from WAL
     return spark.read.schema(
         "window_start timestamp, event_type string, "
         "n_events bigint, total_value double").parquet(sink)
@@ -758,19 +694,7 @@ def stream_live_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
            .option("maxFilesPerTrigger", "1").parquet(src_dir))
     agg = sliding_counts(src, width="12 hours", slide="6 hours",
                          watermark="1 hour")
-    name = f"stream_live_sliding_{next(_NAMES)}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True).start())
-        finished = q.awaitTermination(timeout=300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    if not finished:
-        q.stop()
-        raise RuntimeError("stream_live_sliding did not finish in 300s")
-    return spark.table(name)
+    return _drain_to_memory(agg, "stream_live_sliding", "complete")
 
 
 @query(
@@ -806,20 +730,8 @@ def stream_live_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (spark.readStream.schema(EVENTS)
            .option("maxFilesPerTrigger", "1").parquet(src_dir))
     upd = running_user_totals(src, watermark="1 hour")
-    name = f"stream_live_stateful_totals_{next(_NAMES)}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (upd.writeStream.format("memory").queryName(name)
-             .outputMode("update").trigger(availableNow=True).start())
-        finished = q.awaitTermination(timeout=300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    if not finished:
-        q.stop()
-        raise RuntimeError("stream_live_stateful_totals did not finish in 300s")
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (spark.table(name)
+    return (_drain_to_memory(upd, "stream_live_stateful_totals", "update")
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("user_id", "n_events", "total_value", "n_purchases"))
@@ -951,18 +863,13 @@ def stream_plog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.split("value", r"\|").getItem(1).cast("long"))
                  .alias("total_cents")))
     name = f"stream_plog_source_{next(_NAMES)}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        # processAllAvailable, not availableNow: Python stream sources
-        # fall back to single-batch under availableNow, which would
-        # defeat the paced multi-micro-batch replay this lane exists
-        # to exercise
+    # processAllAvailable, not availableNow: Python stream sources
+    # fall back to single-batch under availableNow, which would defeat
+    # the paced multi-micro-batch replay this lane exists to exercise
+    with _slot_wide_state(spark):
         q = (agg.writeStream.format("memory").queryName(name)
              .outputMode("complete").start())
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(timeout=60)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    q.processAllAvailable()
+    q.stop()
+    q.awaitTermination(timeout=60)
     return spark.table(name)

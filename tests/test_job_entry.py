@@ -11,6 +11,7 @@ import sys
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -21,16 +22,12 @@ from datastream_processing_demo_spark.sources.plog import (
 )
 
 
-def test_job_runs_from_properties_file(spark, tmp_path):
-    src = tmp_path / "src"
-    log = PartitionedLogWriter(str(src), n_partitions=2)
-    values = [
-        f"{'session':<16}{'1700000000000':<16}" + " " * 32 + f"payload-{i}"
-        for i in range(20)
-    ] + [f"{'other':<16}{'1700000000000':<16}" + " " * 32 + "x"]
-    for i, v in enumerate(values):
-        log.append(i % 2, [(f"k{i}", v)])
+def _session_msgs(tag: str, n: int) -> list[str]:
+    return [f"{'session':<16}{'1700000000000':<16}" + " " * 32 + f"{tag}-{i}"
+            for i in range(n)]
 
+
+def _run_once_props(tmp_path, src) -> str:
     props = tmp_path / "job.properties"
     props.write_text(f"""
 job_name=test-job
@@ -43,17 +40,68 @@ main_out_dir={tmp_path}/main
 bulk_endpoint={tmp_path}/bulk
 metric_spool_dir={tmp_path}/metrics
 """)
-    q = run(["-c", str(props)], await_termination=True)
+    return str(props)
+
+
+def _bulk_lines(tmp_path) -> list[str]:
+    lines = []
+    for p in glob.glob(f"{tmp_path}/bulk/*.ndjson"):
+        lines += open(p, encoding="utf-8").read().splitlines()
+    return lines
+
+
+def test_job_runs_from_properties_file(spark, tmp_path):
+    src = tmp_path / "src"
+    log = PartitionedLogWriter(str(src), n_partitions=2)
+    values = _session_msgs("payload", 20) + [
+        f"{'other':<16}{'1700000000000':<16}" + " " * 32 + "x"]
+    for i, v in enumerate(values):
+        log.append(i % 2, [(f"k{i}", v)])
+
+    q = run(["-c", _run_once_props(tmp_path, src)], await_termination=True)
     assert q.lastProgress is not None
 
     assert spark.read.parquet(str(tmp_path / "main")).count() == 21
-    bulk_lines = []
-    for p in glob.glob(f"{tmp_path}/bulk/*.ndjson"):
-        bulk_lines += open(p, encoding="utf-8").read().splitlines()
-    assert len(bulk_lines) == 20  # session tails only
+    assert len(_bulk_lines(tmp_path)) == 20  # session tails only
     metrics = glob.glob(f"{tmp_path}/metrics/*.json")
     assert metrics, "metric reporter produced no batches"
     # the source acks its offsets on commit, as Pulsar's cumulative ack
+    assert committed_acks(str(src)) == {str(p): log.hwm(p) for p in range(2)}
+
+
+def test_run_once_drains_past_an_uncommitted_batch(spark, tmp_path):
+    """A run that died after planning a batch leaves the offsets log one
+    entry ahead of the commits log. The next run-once job re-runs that
+    batch, then drains what landed since: every message reaches the
+    outputs once and the source is acked to its end."""
+    src = tmp_path / "src"
+    log = PartitionedLogWriter(str(src), n_partitions=2)
+    for i, v in enumerate(_session_msgs("first", 10)):
+        log.append(i % 2, [(f"a{i}", v)])
+    props = _run_once_props(tmp_path, src)
+    run(["-c", props])
+    # the crash: the last batch is planned but neither committed nor acked
+    commits = sorted(glob.glob(f"{tmp_path}/ckpt/commits/[0-9]*"),
+                     key=lambda p: int(os.path.basename(p)))
+    offsets = glob.glob(f"{tmp_path}/ckpt/offsets/[0-9]*")
+    assert len(offsets) == len(commits)
+    last = os.path.basename(commits[-1])
+    os.remove(commits[-1])
+    os.remove(f"{tmp_path}/ckpt/commits/.{last}.crc")
+    os.remove(src / "_acks" / "committed.json")
+
+    for i, v in enumerate(_session_msgs("second", 7)):
+        log.append(i % 2, [(f"b{i}", v)])
+    run(["-c", props])
+
+    payloads = [r["payload"] for r in
+                spark.read.parquet(str(tmp_path / "main"))
+                .select(F.trim(F.substring("value", 65, 100))
+                        .alias("payload")).collect()]
+    want = ([f"first-{i}" for i in range(10)]
+            + [f"second-{i}" for i in range(7)])
+    assert sorted(payloads) == sorted(want)
+    assert len(_bulk_lines(tmp_path)) == 17
     assert committed_acks(str(src)) == {str(p): log.hwm(p) for p in range(2)}
 
 
@@ -73,15 +121,11 @@ def test_stop_and_replace_cancels_then_resubmits(spark, tmp_path):
         HttpBulkWriter,
         MetricAvgReporter,
     )
-    from pyspark.sql import functions as F
-
     src = tmp_path / "src"
     src.mkdir()
 
     def write_msgs(fname: str, tag: str, n: int) -> None:
-        msgs = pd.DataFrame({"value": [
-            f"{'session':<16}{'1700000000000':<16}" + " " * 32 + f"{tag}-{i}"
-            for i in range(n)]})
+        msgs = pd.DataFrame({"value": _session_msgs(tag, n)})
         pq.write_table(pa.Table.from_pandas(msgs), str(src / fname))
 
     def start():
@@ -134,8 +178,6 @@ def test_two_incarnation_deploy_under_load(spark, tmp_path):
     BOTH main sinks end oracle-exact."""
     import time
 
-    from pyspark.sql import functions as F
-
     from datastream_processing_demo_spark.job import (
         find_active_query,
         stop_and_replace,
@@ -152,9 +194,7 @@ def test_two_incarnation_deploy_under_load(spark, tmp_path):
     src.mkdir()
 
     def write_msgs(fname: str, tag: str, n: int) -> None:
-        msgs = pd.DataFrame({"value": [
-            f"{'session':<16}{'1700000000000':<16}" + " " * 32 + f"{tag}-{i}"
-            for i in range(n)]})
+        msgs = pd.DataFrame({"value": _session_msgs(tag, n)})
         pq.write_table(pa.Table.from_pandas(msgs), str(src / fname))
 
     def start(tag: str):

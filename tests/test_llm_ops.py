@@ -837,31 +837,6 @@ def test_tfidf_dense_lane_masks_no_overlap_pairs(spark, tmp_path):
     assert {r[0] for r in dense} == {1, 2}
 
 
-def test_native_codec_contract_without_lib():
-    # VERDICT r3 item 7: the native-codec swap point exists behind the
-    # stdlib codec contract. Without PIL (this sandbox) the native path
-    # raises a LOUD typed error — never a silent fallback — while
-    # decode_image_best composes to the stdlib codec with the same
-    # return contract.
-    from datastream_processing_demo_spark.operators import native_codec as nc
-    from datastream_processing_demo_spark.operators.multimodal import (
-        decode_image_real, encode_ppm_rgb)
-
-    payload = encode_ppm_rgb(bytes(range(1, 25)), width=4)
-    if not nc.HAVE_PIL:
-        with pytest.raises(nc.NativeCodecUnavailable):
-            nc.decode_image_native(payload)
-        best = nc.decode_image_best(payload)
-        ref = decode_image_real(payload)
-        assert best["width"] == ref["width"]
-        assert (best["pixels"] == ref["pixels"]).all()
-    else:  # conformance where a lib exists: pixel-identical lossless
-        got, ref = nc.decode_image_native(payload), decode_image_real(payload)
-        assert (got["width"], got["height"], got["channels"]) == \
-            (ref["width"], ref["height"], ref["channels"])
-        assert (got["pixels"] == ref["pixels"]).all()
-
-
 def test_tfidf_lane_decision(spark, sf_dir):
     """The executable pick-by-vocab-shape rule: this synthetic corpus
     (31-word vocab, every posting maximally hot) must pick the dense

@@ -555,12 +555,13 @@ def test_default_state_store_is_hdfs_backed(spark):
 
 
 def _dedup_window_counts(spark, src_dir: str, ckpt: str, counts: dict,
-                         store: str | None = None):
+                         conf: dict | None = None):
     """Run dedup_within_watermark + a 6 h window x user count over the
     files in `src_dir` (one per micro-batch) to the end, in update mode;
     each update lands in `counts`, keyed by (window start in epoch
-    seconds, user_id). `store` sets the state store the query starts
-    with; the session's setting is restored afterwards."""
+    seconds, user_id). `conf` holds session settings the query starts
+    with (state store, shuffle partitions); the session's values are
+    restored afterwards."""
     events = (spark.readStream.schema(EVENTS)
               .option("maxFilesPerTrigger", 1).parquet(src_dir))
     agg = (dedup_within_watermark(events, watermark="30 days")
@@ -573,15 +574,17 @@ def _dedup_window_counts(spark, src_dir: str, ckpt: str, counts: dict,
         counts.update(((r["start"], r["user_id"]), r["n"])
                       for r in df.collect())
 
-    before = spark.conf.get(_STORE_KEY)
-    if store is not None:
-        spark.conf.set(_STORE_KEY, store)
+    conf = conf or {}
+    before = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         q = (agg.writeStream.outputMode("update").foreachBatch(sink)
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
     finally:
-        spark.conf.set(_STORE_KEY, before)
+        for k, v in before.items():
+            spark.conf.set(k, v)
     q.awaitTermination(timeout=180)
     assert q.exception() is None
     return q
@@ -592,46 +595,106 @@ def _state_custom_metrics(q) -> set[str]:
             for k in op["customMetrics"]}
 
 
-def test_rocksdb_checkpoint_restarts_under_default_store(
-        spark, events_pdf, tmp_path):
-    """A query checkpointed under RocksDB restarts, now that the session
-    default is the HDFS-backed store, on RocksDB (the provider is in the
-    checkpoint's offset metadata) and ends with the counts of an
-    uninterrupted HDFS-backed run, which match pandas."""
+def _state_partitions(q) -> set[int]:
+    return {op["numShufflePartitions"] for p in q.recentProgress
+            for op in p["stateOperators"]}
+
+
+def _dup_stream(events_pdf, tmp_path):
+    """Events as three files, then the first third again as a fourth
+    (cross-batch dups), in `src`. The last two files are held back
+    until the returned `release()` moves them in. Returns (src,
+    release, counts pandas expects)."""
     src = str(tmp_path / "events")
     _write_chunks(events_pdf, src, n_chunks=3)
-    # the first chunk's events again, as a fourth file: cross-batch dups
     first = events_pdf.iloc[:len(events_pdf) // 3]
     _write_chunks(first, str(tmp_path / "dup_tmp"), 1)
     files = sorted(glob.glob(os.path.join(src, "*.parquet")))
     files.append(os.path.join(src, "chunk-zz-dup.parquet"))
     os.rename(glob.glob(str(tmp_path / "dup_tmp" / "*.parquet"))[0],
               files[-1])
-    # hide the last two files from the first incarnation
     held = str(tmp_path / "held")
     os.makedirs(held)
     for f in files[2:]:
         os.rename(f, os.path.join(held, os.path.basename(f)))
 
+    def release():
+        for f in files[2:]:
+            os.rename(os.path.join(held, os.path.basename(f)), f)
+
+    ev = events_pdf.drop_duplicates("event_id")
+    start = (ev["ts"].dt.floor("6h").astype("int64") // 1_000_000)
+    want = ev.groupby([start, ev["user_id"]]).size()
+    return src, release, {(int(s), int(u)): int(n)
+                          for (s, u), n in want.items()}
+
+
+def test_rocksdb_checkpoint_restarts_under_default_store(
+        spark, events_pdf, tmp_path):
+    """A query checkpointed under RocksDB restarts, now that the session
+    default is the HDFS-backed store, on RocksDB (the provider is in the
+    checkpoint's offset metadata) and ends with the counts of an
+    uninterrupted HDFS-backed run, which match pandas."""
+    src, release, want = _dup_stream(events_pdf, tmp_path)
     restarted: dict = {}
     ckpt = str(tmp_path / "ckpt_restart")
     q1 = _dedup_window_counts(spark, src, ckpt, restarted,
-                              store=ROCKSDB_STORE)
+                              conf={_STORE_KEY: ROCKSDB_STORE})
     assert any(k.startswith("rocksdb") for k in _state_custom_metrics(q1))
-    for f in files[2:]:
-        os.rename(os.path.join(held, os.path.basename(f)), f)
+    release()
     q2 = _dedup_window_counts(spark, src, ckpt, restarted)
     assert q2.recentProgress, "the restart processed no batch"
     assert any(k.startswith("rocksdb") for k in _state_custom_metrics(q2))
 
     uninterrupted: dict = {}
     q3 = _dedup_window_counts(spark, src, str(tmp_path / "ckpt_hdfs"),
-                              uninterrupted, store=HDFS_STORE)
+                              uninterrupted, conf={_STORE_KEY: HDFS_STORE})
     assert not any(k.startswith("rocksdb")
                    for k in _state_custom_metrics(q3))
+    assert restarted == uninterrupted == want
 
-    ev = events_pdf.drop_duplicates("event_id")
-    start = (ev["ts"].dt.floor("6h").astype("int64") // 1_000_000)
-    want = ev.groupby([start, ev["user_id"]]).size()
-    assert restarted == uninterrupted == {
-        (int(s), int(u)): int(n) for (s, u), n in want.items()}
+
+def test_state_partitions_follow_task_slots_and_checkpoint(
+        spark, events_pdf, tmp_path):
+    """A fresh stateful query on the default session runs one state-store
+    partition per task slot. A checkpoint started at the old default of
+    2x slots (at least 8) restarts at that count, which Spark records in
+    the checkpoint, and ends with the counts of an uninterrupted run."""
+    slots = spark.sparkContext.defaultParallelism  # local[SPARK_GRAFT_CPUS]
+    old_width = max(2 * slots, 8)
+    src, release, want = _dup_stream(events_pdf, tmp_path)
+    restarted: dict = {}
+    ckpt = str(tmp_path / "ckpt_restart")
+    q1 = _dedup_window_counts(
+        spark, src, ckpt, restarted,
+        conf={"spark.sql.shuffle.partitions": str(old_width)})
+    release()
+    q2 = _dedup_window_counts(spark, src, ckpt, restarted)
+    assert q2.recentProgress, "the restart processed no batch"
+    assert _state_partitions(q1) == _state_partitions(q2) == {old_width}
+
+    uninterrupted: dict = {}
+    q3 = _dedup_window_counts(spark, src, str(tmp_path / "ckpt_fresh"),
+                              uninterrupted)
+    assert _state_partitions(q3) == {slots}
+    assert restarted == uninterrupted == want
+
+
+def test_live_queries_start_at_most_one_partition_per_slot(spark):
+    """The registered live queries start inside `_slot_wide_state`, so a
+    caller's session left at Spark's default of 200 shuffle partitions
+    does not give their fresh checkpoints 200 state-store partitions.
+    The session's own value is back afterwards."""
+    from datastream_processing_demo_spark.plans.streaming_live import (
+        _slot_wide_state,
+    )
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try:
+        with _slot_wide_state(spark):
+            assert (int(spark.conf.get(key))
+                    == spark.sparkContext.defaultParallelism)
+        assert spark.conf.get(key) == "200"
+    finally:
+        spark.conf.set(key, before)

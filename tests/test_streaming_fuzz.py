@@ -64,13 +64,14 @@ _qname = (f"wm_fuzz_{i}" for i in itertools.count())
 @pytest.fixture(autouse=True, scope="module")
 def _two_state_partitions(spark):
     """Run this lane's queries on 2 shuffle partitions, so 2 state-store
-    partitions per stateful operator, instead of the session's 8. The
-    rules under test are per key and per query (watermarks are global),
-    so the partition count does not change what a query emits; it sets
-    how many state-store tasks, delta files and checksum files each
-    micro-batch writes, which is most of an example's time here (on 4
-    vCPUs the watermark and dedup lanes ran 25-35% faster on 2). A
-    restart keeps the count its checkpoint recorded."""
+    partitions per stateful operator, instead of the session's one per
+    task slot. The rules under test are per key and per query
+    (watermarks are global), so the partition count does not change what
+    a query emits; it sets how many state-store tasks, delta files and
+    checksum files each micro-batch writes, which is most of an
+    example's time here (on 4 vCPUs the watermark and dedup lanes ran
+    25-35% faster on 2 than on 8). A restart keeps the count its
+    checkpoint recorded."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     spark.conf.set(key, "2")

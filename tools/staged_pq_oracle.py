@@ -60,8 +60,11 @@ def _connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     # bounded, spill-to-disk evaluation: the whole point of the staged
     # form is that no single pipeline needs the box's RAM — cap it so a
     # regression in a stage surfaces as spill/slowness, never as a
-    # global OOM that takes concurrent work down with it
-    con.execute("SET memory_limit='40GB'")
+    # global OOM that takes concurrent work down with it. Half the
+    # host's physical RAM: the Spark JVM this tool also runs needs the
+    # rest.
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con.execute(f"SET memory_limit='{phys // 2 // 2**20}MiB'")
     for t in TABLE_NAMES:
         con.execute(f"CREATE OR REPLACE VIEW {t} AS "
                     f"SELECT * FROM read_parquet('{table_path(sf_dir, t)}')")
