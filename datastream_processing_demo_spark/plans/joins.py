@@ -286,9 +286,10 @@ def join_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (matched -> take change, not-matched-by-source -> keep base,
     # not-matched-by-target -> insert). The change set is derived
     # deterministically from orders itself. At 100 TB both sides shuffle
-    # once on the merge key; with a bucketed base table (sources/
-    # layout.py) the base-side shuffle disappears entirely, which is how
-    # an incremental training-corpus refresh should run.
+    # once on the merge key; with a base table bucketed on that key
+    # (`DataFrameWriter.bucketBy`) the base-side shuffle disappears
+    # entirely, which is how an incremental training-corpus refresh
+    # should run.
     o = t(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     base = o.select(F.col("o_orderkey").alias("key"),

@@ -28,6 +28,29 @@ about 20M state rows with the default 16g heap, or 2M with perfbench's
 org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
 in `EngineConfig.extra_conf` or SPARK_GRAFT_EXTRA_CONF. A checkpoint
 keeps the provider it was started with across restarts.
+
+Python processes: the engine starts these kinds, listed with their PSS
+at the memory peak of perfbench `pipeline` (local[4]):
+- the driver, the process that calls `get_session`: about 95 MB;
+- three data-source planner daemons (`pyspark.daemon` serving
+  `lookup_data_sources`, `create_data_source` and
+  `plan_data_source_read`), 33-38 MB each, each with one worker of
+  42-53 MB;
+- one `python_streaming_source_runner` per streaming query on a Python
+  source such as `plog`: about 62 MB;
+- the worker daemon, `worker_daemon.py` (about 39 MB), and the
+  `pyspark.worker` processes it forks: two per `pipeline` task (the
+  `plog` read and the `PartitionSink` pass), so 8 on 4 task slots, about
+  49 MB each.
+Workers fork from a daemon that has already imported numpy, pandas,
+pyarrow and the package's source and sink modules and then frozen them
+out of the garbage collector (`gc.freeze`). Each worker shares those
+pages copy-on-write instead of importing them privately (78 MB each when
+forked from plain `pyspark.daemon`), and the `gc.collect()` a reused
+worker runs after each task skips them. The executors must be able to
+import this package, which `plog` already requires. To fork from
+Spark's own daemon instead, set
+`spark.python.daemon.module=pyspark.daemon` in SPARK_GRAFT_EXTRA_CONF.
 """
 
 from __future__ import annotations
@@ -57,8 +80,9 @@ def _cpus() -> int:
 
 def _export_package_path() -> None:
     """Put this package's parent directory on PYTHONPATH, which the JVM
-    and its local-mode Python workers inherit when the JVM starts: the
-    workers unpickle the `plog` source by module path."""
+    and its local-mode Python workers inherit when the JVM starts: Spark
+    starts this package's `worker_daemon`, and the workers unpickle the
+    `plog` source by module path."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     if root not in paths:
@@ -113,6 +137,8 @@ def get_session(config: EngineConfig | None = None) -> SparkSession:
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module",
+                "datastream_processing_demo_spark.worker_daemon")
     )
     for k, v in cfg.extra_conf.items():
         builder = builder.config(k, str(v))

@@ -25,7 +25,7 @@ order recur:
 - bulk doc ids are `<query>-<batch_id>-<pid>-<ordinal>`, so a replay
   rewrites the same ids at an `_id`-keyed store, and queries sharing the
   store (each starts at batch 0) never collide;
-- the metric file is keyed by batch id.
+- the metric file is keyed by batch id and replaced the same way.
 
 Bulk transport is injectable: an `http(s)://` endpoint posts through a
 per-process keep-alive connection that lives for one task's posts; a
@@ -330,7 +330,9 @@ class PartitionSink:
 
 class MetricAvgReporter:
     """Per-batch avg of delay_ms (ZhiYan A2 analogue), spooled as JSON
-    `{batch_id, n, avg_delay_ms, reported_at}` to `metric-{batch_id}.json`."""
+    `{batch_id, n, avg_delay_ms, reported_at}` to `metric-{batch_id}.json`
+    through a dot-prefixed temp file and `os.replace`: a reader never
+    sees a partial file, and a replayed batch replaces its own."""
 
     def __init__(self, spool_dir: str) -> None:
         self.spool_dir = spool_dir
@@ -345,6 +347,9 @@ class MetricAvgReporter:
         os.makedirs(self.spool_dir, exist_ok=True)
         rec = {"batch_id": batch_id, "n": n, "avg_delay_ms": avg,
                "reported_at": time.time()}
-        path = os.path.join(self.spool_dir, f"metric-{batch_id}.json")
-        with open(path, "w", encoding="utf-8") as f:
+        name = f"metric-{batch_id}.json"
+        path = os.path.join(self.spool_dir, name)
+        tmp = os.path.join(self.spool_dir, f".{name}.tmp")
+        with open(tmp, "w", encoding="utf-8") as f:
             json.dump(rec, f)
+        os.replace(tmp, path)

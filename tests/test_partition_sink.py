@@ -126,7 +126,17 @@ def test_metric_reporter_writes_stats_and_skips_empty(tmp_path):
     rep = MetricAvgReporter(str(tmp_path / "metric"))
     rep.report_batch((0, None), 4)
     assert not os.path.exists(tmp_path / "metric")
-    rep.report_batch((3, 750.0), 5)
-    with open(tmp_path / "metric" / "metric-5.json", encoding="utf-8") as f:
-        rec = json.load(f)
+
+    def report(stats) -> dict:
+        rep.report_batch(stats, 5)
+        # written through a temp file that os.replace moves into place
+        assert os.listdir(tmp_path / "metric") == ["metric-5.json"]
+        with open(tmp_path / "metric" / "metric-5.json",
+                  encoding="utf-8") as f:
+            return json.load(f)
+
+    rec = report((3, 750.0))
     assert (rec["batch_id"], rec["n"], rec["avg_delay_ms"]) == (5, 3, 750.0)
+    # a replay of the batch replaces the file
+    rec = report((4, 500.0))
+    assert (rec["batch_id"], rec["n"], rec["avg_delay_ms"]) == (5, 4, 500.0)
