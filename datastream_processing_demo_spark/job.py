@@ -13,8 +13,8 @@ Config keys mirror the reference's properties surface (§2.1 config
 table): parallelism, checkpoint_interval, checkpoint_location,
 source_dir (stands in for pulsar_topics: a `plog` partitioned-log
 directory, sources/plog.py, read with the partitions its `.hwm`
-sidecars name and acked on each checkpoint; a Kafka `subscribe` string
-would slot in the same place on a real cluster),
+sidecars name and acked on each checkpoint; `plog` is the only
+message source),
 bulk_endpoint (ctsdb_addr analogue), bulk_batch_size (ctsdb_batch_size),
 metric_spool_dir (zhiyan analogue), main_out_dir.
 """

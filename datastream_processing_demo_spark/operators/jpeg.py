@@ -552,12 +552,3 @@ def decode_jpeg(data: bytes) -> dict:
     out = np.clip(np.round(rgb), 0, 255).astype(np.uint8)
     return {"width": int(width), "height": int(height), "channels": 3,
             "pixels": out[:height, :width, :]}
-
-
-def decode_jpeg_gray(data: bytes) -> dict:
-    """Back-compat alias: decode and require a single-component file."""
-    d = decode_jpeg(data)
-    if d["channels"] != 1:
-        raise ValueError(f"expected grayscale JPEG, got "
-                         f"{d['channels']} components")
-    return d

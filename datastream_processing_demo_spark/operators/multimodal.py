@@ -269,10 +269,10 @@ def decode_image_real(payload: bytes) -> dict:
     """Real image decode hook. Binary netpbm (P5/P6) parses via
     `decode_ppm_real`; PNG — a genuinely COMPRESSED container — via
     `decode_png_real` (stdlib zlib inflate + five-filter scanline
-    reconstruction); baseline grayscale JPEG — a genuinely LOSSY DCT
-    codec — via `operators.jpeg.decode_jpeg_gray` (full marker walk,
-    in-file Huffman tables, dequant + IDCT). No third-party codec
-    anywhere. Anything else (color/progressive JPEG, video) raises."""
+    reconstruction); baseline JPEG, grayscale or 4:4:4 color — a
+    genuinely LOSSY DCT codec — via `operators.jpeg.decode_jpeg` (full
+    marker walk, in-file Huffman tables, dequant + IDCT). No third-party
+    codec anywhere. Anything else (progressive JPEG, video) raises."""
     if payload[:2] in (b"P6", b"P5"):
         return decode_ppm_real(payload)
     if payload[:8] == _PNG_SIG:
@@ -282,7 +282,7 @@ def decode_image_real(payload: bytes) -> dict:
         return decode_jpeg(payload)
     raise NotImplementedError(
         f"no decoder for payload with magic {payload[:8]!r}: netpbm, "
-        "PNG and baseline grayscale JPEG decode here; other formats "
+        "PNG and baseline JPEG decode here; other formats "
         "need a cluster image with PIL/ffmpeg "
         "(note: a valid PNG starts with the full 8-byte signature — a "
         "shorter/corrupted prefix lands here, check for truncation)")

@@ -211,19 +211,6 @@ def agg_ordered_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # NOTE: retired from the registry in r4 (was oracle-less rows-only; its
-# r1 driver entry was a permanent `err`). Its whole surface is exercised
-# and driver-GREEN through the exact property-oracled `agg_approx_bounds`
-# below; kept as a plain helper for the pytest error-bound checks.
-def agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_partkey").alias("approx_parts"),
-        F.percentile_approx("l_extendedprice", 0.5).alias("approx_median_price"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-# NOTE: retired from the registry in r4 (was oracle-less rows-only; its
 # r1 driver entry was a permanent `err`). The sketch-rollup surface is
 # exercised and driver-GREEN through `agg_sketch_bounds` below, which
 # calls this helper and property-checks every unioned estimate.
@@ -546,12 +533,13 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_approx_bounds", "aggregates",
-    # Driver-checkable companion to agg_approx: the HLL estimate and the
-    # t-digest median are engine-internal VALUES (no ANSI oracle can
-    # reproduce them), but their error CONTRACTS are checkable — emit
-    # the exact quantities both engines agree on plus in-bounds flags
-    # that Spark verifies empirically. A sketch regression (estimate
-    # drifting past its documented rsd) flips a flag and hash-fails.
+    # approx_count_distinct and percentile_approx per return flag: the
+    # HLL estimate and the t-digest median are engine-internal VALUES
+    # (no ANSI oracle can reproduce them), but their error CONTRACTS
+    # are checkable — emit the exact quantities both engines agree on
+    # plus in-bounds flags that Spark verifies empirically. A sketch
+    # regression (estimate drifting past its documented rsd) flips a
+    # flag and hash-fails.
     oracle="""
     SELECT l_returnflag,
            COUNT(DISTINCT l_partkey) AS n_parts_exact,
@@ -571,7 +559,7 @@ def agg_approx_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.groupBy("l_returnflag").agg(
         exact_parts.alias("n_parts_exact"),
         F.count(F.lit(1)).alias("n_rows"),
-        # default rsd 5%; same 4-sigma-ish envelope the pytest bound uses
+        # default rsd 5%, so 20% (or 5 distinct) is a 4-sigma envelope
         (F.abs(approx_parts - exact_parts)
          <= F.greatest(0.20 * exact_parts, F.lit(5.0)))
         .cast("long").alias("hll_within_bounds"),

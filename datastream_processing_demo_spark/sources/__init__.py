@@ -1,1 +1,3 @@
-"""Source connectors beyond parquet (SURVEY.md §2.2 source rows)."""
+"""Sources beyond Spark's built-in readers: `plog`, the partitioned-log
+message source (the reference's Pulsar analogue), and the file readers
+with explicit schemas."""

@@ -1,8 +1,9 @@
 """Custom Python DataSource stream READER: a partitioned log with
 offset/ack semantics — the sandbox-faithful stand-in for the reference's
 Pulsar source (PulsarSource.java:22-214), whose connector jar does not
-exist here (SURVEY.md §2.2 row S1; tests/test_kafka_source.py pins the
-exact option-mapping contract for the day a real broker jar is present).
+exist here (SURVEY.md §2.2 row S1). It is the package's one message
+source: the job CLI, the live `stream_plog_source` query and the
+benchmark all read it.
 
 What a log broker gives a streaming job, reproduced as a first-class
 `readStream.format("plog")` source:
@@ -285,7 +286,7 @@ def committed_acks(log_dir: str) -> dict | None:
 class _PartitionedLogBatchReader(DataSourceReader):
     """Batch read of the whole log up to the current high watermark —
     the backfill/bootstrap path every log consumer needs next to the
-    stream (Kafka's `spark.read.format("kafka")` analogue). One input
+    stream (the analogue of a batch read of a Kafka topic). One input
     split per log partition; same torn-tail rule (reads only below the
     published hwm)."""
 

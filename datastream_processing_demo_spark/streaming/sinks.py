@@ -7,7 +7,7 @@ metric reporter.
 Reference behaviors reproduced:
 - CTSDBSink.java: buffered batch POST of concatenated records to
   `{addr}/{metric}/doc/_bulk` (:143-160,185-210), literal "error"
-  records dropped (:120-123), pooled HTTP connections (:98-106),
+  records dropped (:120-123), keep-alive HTTP connections (:98-106),
   batch-size cap (:128-135). Errors were logged-and-swallowed in the
   reference (`// todo throw exception`, :165,170); here a failed post
   RAISES so Structured Streaming retries the micro-batch — upgrading
@@ -27,9 +27,11 @@ order recur:
   store (each starts at batch 0) never collide;
 - the metric file is keyed by batch id and replaced the same way.
 
-Bulk transport is injectable: an `http(s)://` endpoint posts through a
-per-process keep-alive connection that lives for one task's posts; a
-filesystem path spools request bodies to files (used by tests; also a
+Bulk transport is injectable: an `http(s)://` endpoint posts one
+partition's chunks over one keep-alive connection, opened by its first
+post and closed when the partition's posts end (the analogue of the
+reference's pooled HTTP client, CTSDBSink.java:98-106); a filesystem
+path spools request bodies to files (used by tests; also a
 reasonable dead-letter pattern). The data path never touches the
 driver, matching the reference's parallel sink subtasks
 (CTSDBSink.java:118-183 at sink_parallelism,
@@ -53,16 +55,15 @@ import pyarrow.compute as pc
 
 _BULK_DROP_LITERAL = "error"  # CTSDBSink.java:120-123
 
-# Per-process (i.e. per-executor-worker) keep-alive connection cache —
-# the analogue of the reference's pooled HTTP client (CTSDBSink.java:98-106).
-_CONN_CACHE: dict = {}
 
-
-def _post_pooled(endpoint: str, body: str, timeout_s: float = 5.0,
-                 retry_attempts: int = 3, backoff_s: float = 0.2,
-                 auth_header: str | None = None) -> None:
-    """POST via a cached keep-alive connection, retaining THIS chunk for
-    in-task resend on transient failure.
+def _post(conn: http.client.HTTPConnection | None, endpoint: str, body: str,
+          timeout_s: float = 5.0, retry_attempts: int = 3,
+          backoff_s: float = 0.2, auth_header: str | None = None,
+          ) -> http.client.HTTPConnection:
+    """POST one chunk on the keep-alive connection `conn` (None opens
+    one), retaining THIS chunk for in-task resend on transient failure;
+    returns the connection for the next chunk. On a raise the
+    connection is already closed.
 
     The reference sink keeps only the *failed* sub-batch and resends it
     on the next flush (ZhiYanSink.java:95-97,111) — earlier, already-
@@ -76,13 +77,11 @@ def _post_pooled(endpoint: str, body: str, timeout_s: float = 5.0,
     the endpoint exactly-once-effective.
     """
     u = urlparse(endpoint)
-    key = (u.scheme, u.netloc)
-    conn = _CONN_CACHE.get(key)
     last_err: str | Exception | None = None
-    # One FREE immediate reconnect per call, outside the backoff budget
-    # — but only when a POOLED connection existed to go stale (server
-    # closed the keep-alive between two chunks of a task, a benign
-    # case; it must not sleep, and must survive retry_attempts=1,
+    # One FREE immediate reconnect per chunk, outside the backoff budget
+    # — but only for a connection that already served a chunk and so
+    # could go stale (server closed the keep-alive between two chunks, a
+    # benign case; it must not sleep, and must survive retry_attempts=1,
     # which disables only the HTTP-level retain-retry). A fresh
     # connection that fails outright gets no freebie: a hard-down
     # endpoint should consume the budget, not double-hammer.
@@ -94,14 +93,6 @@ def _post_pooled(endpoint: str, body: str, timeout_s: float = 5.0,
             cls = (http.client.HTTPSConnection if u.scheme == "https"
                    else http.client.HTTPConnection)
             conn = cls(u.netloc, timeout=timeout_s)
-            _CONN_CACHE[key] = conn
-        # The cached connection was built with the FIRST caller's
-        # timeout; honor this call's value on the live socket too. Cached
-        # connections live until the task's posts finish
-        # (`_close_pooled`), so chunks of one partition share a socket.
-        conn.timeout = timeout_s
-        if conn.sock is not None:
-            conn.sock.settimeout(timeout_s)
         try:
             headers = {"Content-Type": "application/x-ndjson"}
             if auth_header is not None:
@@ -115,7 +106,6 @@ def _post_pooled(endpoint: str, body: str, timeout_s: float = 5.0,
             # the connection and retry the same chunk.
             last_err = exc
             conn.close()
-            _CONN_CACHE.pop(key, None)
             conn = None
             if free_reconnect > 0:
                 free_reconnect -= 1
@@ -140,21 +130,13 @@ def _post_pooled(endpoint: str, body: str, timeout_s: float = 5.0,
             # Non-retryable client error: raise immediately so the task
             # fails and Structured Streaming replays the micro-batch from
             # the WAL.
+            conn.close()
             raise IOError(f"bulk post failed: HTTP {resp.status}")
-        return
-    raise IOError(
-        f"bulk post failed after {max(1, retry_attempts)} attempts: {last_err}")
-
-
-def _close_pooled(endpoint: str) -> None:
-    """Close this process's pooled connection to `endpoint`, if any.
-
-    Module-level on purpose: a function shipped to executors by value
-    would carry its own copy of `_CONN_CACHE` and close nothing."""
-    u = urlparse(endpoint)
-    conn = _CONN_CACHE.pop((u.scheme, u.netloc), None)
+        return conn
     if conn is not None:
         conn.close()
+    raise IOError(
+        f"bulk post failed after {max(1, retry_attempts)} attempts: {last_err}")
 
 
 def task_partition_id() -> int:
@@ -188,12 +170,13 @@ class BulkPoster:
         buf: list[str] = []
         chunk_no = 0
         ordinal = 0
+        conn = None  # one keep-alive connection for this partition's posts
 
         def flush() -> None:
-            nonlocal chunk_no
+            nonlocal chunk_no, conn
             body = "\n".join(buf) + "\n"
             if self.is_http:
-                _post_pooled(self.endpoint, body,
+                conn = _post(conn, self.endpoint, body,
                              retry_attempts=self.retry_attempts,
                              backoff_s=self.backoff_s,
                              auth_header=self.auth_header)
@@ -224,8 +207,8 @@ class BulkPoster:
             if buf:
                 flush()
         finally:
-            if self.is_http:
-                _close_pooled(self.endpoint)
+            if conn is not None:
+                conn.close()
         return ordinal
 
 

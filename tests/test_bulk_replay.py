@@ -279,6 +279,52 @@ def test_bulk_post_basic_auth_required():
         srv.shutdown()
 
 
+def test_stale_keep_alive_gets_one_free_reconnect():
+    """A server that closes each keep-alive connection after one
+    response, as an idle timeout would, stales the connection between
+    two chunks of a partition. The poster reconnects once for free, so
+    every chunk lands even with retry_attempts=1, which disables only
+    the HTTP-level retain-retry."""
+    import socket
+
+    srv = socket.create_server(("127.0.0.1", 0))
+    srv.settimeout(0.1)
+    stop = threading.Event()
+    state = {"conns": 0, "bodies": []}
+
+    def serve():
+        while not stop.is_set():
+            try:
+                c, _ = srv.accept()
+            except TimeoutError:
+                continue
+            state["conns"] += 1
+            with c, c.makefile("rb") as f:
+                n = 0
+                while (line := f.readline()) not in (b"\r\n", b""):
+                    if line.lower().startswith(b"content-length:"):
+                        n = int(line.split(b":")[1])
+                state["bodies"].append(f.read(n).decode("utf-8"))
+                # keep-alive response (no `Connection: close`), then drop
+                c.sendall(b"HTTP/1.1 200 OK\r\nContent-Length: 0\r\n\r\n")
+
+    server = threading.Thread(target=serve, daemon=True)
+    server.start()
+    endpoint = f"http://127.0.0.1:{srv.getsockname()[1]}/bulk"
+    payloads = [f'{{"k": {i}}}' for i in range(7)]
+    try:
+        posted = HttpBulkWriter(endpoint, batch_size=2, retry_attempts=1) \
+            .poster("q-0").post([pa.array(payloads)], 0)
+    finally:
+        stop.set()
+        server.join()
+        srv.close()
+    assert posted == 7
+    assert len(state["bodies"]) == state["conns"] == 4
+    assert sorted(json.loads(line)["doc"] for body in state["bodies"]
+                  for line in body.splitlines()) == sorted(payloads)
+
+
 def _start_scheduled_server(fail_ordinals: set[int]):
     """Like _start_bulk_server, but 503s exactly the POSTs whose global
     arrival ordinal (0-based) is in `fail_ordinals` — a hypothesis-

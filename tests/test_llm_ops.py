@@ -477,12 +477,12 @@ def test_jpeg_codec_roundtrip_property():
 
     from datastream_processing_demo_spark.operators.jpeg import (
         MAX_ABS_ERR,
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_jpeg_gray,
     )
 
     def check(payload, width=32):
-        d = decode_jpeg_gray(encode_jpeg_gray(payload, width=width))
+        d = decode_jpeg(encode_jpeg_gray(payload, width=width))
         n = len(payload)
         h = max(1, -(-n // width))
         assert (d["width"], d["height"], d["channels"]) == (width, h, 1)
@@ -509,22 +509,23 @@ def test_jpeg_codec_error_contract():
     import pytest
 
     from datastream_processing_demo_spark.operators.jpeg import (
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_jpeg_gray,
     )
 
     good = encode_jpeg_gray(b"hello jpeg world", width=32)
+    assert decode_jpeg(good)["channels"] == 1
 
     with pytest.raises(ValueError, match="missing SOI"):
-        decode_jpeg_gray(b"\x00\x00" + good[2:])
+        decode_jpeg(b"\x00\x00" + good[2:])
     with pytest.raises(ValueError, match="truncated|missing EOI"):
-        decode_jpeg_gray(good[:40])
+        decode_jpeg(good[:40])
     # flip SOF0 -> SOF2 (progressive): must refuse, not mis-decode
     import struct
     sof_at = good.find(b"\xFF\xC0")
     prog = good[:sof_at] + b"\xFF\xC2" + good[sof_at + 2:]
     with pytest.raises(ValueError, match="baseline"):
-        decode_jpeg_gray(prog)
+        decode_jpeg(prog)
     # decode_image_real dispatches JPEG by SOI magic
     from datastream_processing_demo_spark.operators.multimodal import (
         decode_image_real,
@@ -536,16 +537,14 @@ def test_jpeg_codec_error_contract():
 def test_jpeg_color_roundtrip_property():
     # COLOR tier: 4:4:4 YCbCr baseline with per-component quant tables
     # and interleaved MCUs. Bound check vs the original RGB raster for
-    # arbitrary payloads; gray wrapper must REFUSE a color file.
+    # arbitrary payloads.
     import numpy as np
-    import pytest
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from datastream_processing_demo_spark.operators.jpeg import (
         MAX_ABS_ERR_COLOR,
         decode_jpeg,
-        decode_jpeg_gray,
         encode_jpeg_rgb,
     )
 
@@ -568,8 +567,6 @@ def test_jpeg_color_roundtrip_property():
     roundtrip()
     check(b"\xff" * 4096, width=32)
     check(bytes([255, 0, 0] * 1000), width=32)    # saturated red
-    with pytest.raises(ValueError, match="grayscale"):
-        decode_jpeg_gray(encode_jpeg_rgb(b"color file"))
 
 
 def test_semdedup_cluster_contract(spark, sf_dir):
