@@ -29,6 +29,45 @@ org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
 in `EngineConfig.extra_conf` or SPARK_GRAFT_EXTRA_CONF. A checkpoint
 keeps the provider it was started with across restarts.
 
+JIT: much of the JVM's CPU goes to HotSpot compiling Spark itself, not
+to running queries. Over one untraced perfbench `state_batch` run
+(seed 2, 4 vCPU) with HotSpot's default thresholds, the JVM used 64.9
+CPU-s: C2 compiler threads 29.9 s, C1 5.8 s, executor task threads 9.7 s.
+Over a session start and three passes of its query mix, C2 compiled
+2,333 methods in 19.9 s, 0.6 s of it Spark's generated code: the rest
+is warm-up code that runs a few thousand times (JDK class loading,
+lambda forms, zip, Java serialization, Catalyst, Scala, Janino), not
+the queries' hot loops (-XX:+LogCompilation). `JIT_OPTIONS` raises
+HotSpot's four tier-4 (C2) thresholds x5, so such methods stay in C1
+code while hot loops still reach C2: on the same `state_batch` run C2
+fell to 14.7 s, executor threads rose to 11.3 s and the JVM total fell
+to 51.4 s; over 20 interleaved pairs (seeds 1-10 and 14-23) its
+work_cpu_ref_s fell by about a fifth. x30 and x100 kept hot loops in
+profiled C1 code too long (executor threads 22 and 39 s on seed 4), and
+C1 alone (-XX:TieredStopAtLevel=1) made each warm pass of the query mix
+about 45% slower.
+The price is paid at start-up, which runs the same warm-up code: the
+streaming job (perfbench `pipeline`) took about 9% longer from its
+launch to its first micro-batch's result. Once running, over ten
+20-second open loops at 1000 msgs/s, interleaved with HotSpot's
+defaults, its per-batch CPU and p50 latency moved by less than the
+runs' own spread. Over three 3-minute ones the last ~100 micro-batches
+cost the same CPU per row, though one pair read 17% more per-batch CPU
+and 18% more p50 latency over the whole loop. The open loop used 2-5%
+less CPU. A 7-minute pair read per-batch CPU 1.84 -> 1.69 s and p50
+latency 859 -> 823 ms. Longer runs were not measured.
+The flags go in spark.driver.defaultJavaOptions, which the launcher
+puts before spark.driver.extraJavaOptions, and HotSpot takes the last
+occurrence of a flag. This conf replaces any value spark-defaults.conf
+gives it, so site-wide driver flags belong in extraJavaOptions. To
+restore HotSpot's defaults, append
+`-XX:Tier4InvocationThreshold=5000 -XX:Tier4MinInvocationThreshold=600
+-XX:Tier4CompileThreshold=15000 -XX:Tier4BackEdgeThreshold=40000` to
+spark.driver.extraJavaOptions (in `EngineConfig.extra_conf` or
+SPARK_GRAFT_EXTRA_CONF). Like spark.driver.memory, the flags do
+nothing if the JVM already exists. Local-mode executors run in the
+driver JVM; a cluster's executors keep HotSpot's defaults.
+
 Python processes: the engine starts these kinds, listed with their PSS
 at the memory peak of perfbench `pipeline` (local[4]):
 - the driver, the process that calls `get_session`: about 95 MB;
@@ -72,6 +111,16 @@ class EngineConfig:
     master: str | None = None          # default: local[$SPARK_GRAFT_CPUS]
     parallelism: int | None = None     # reference `parallelism` -> shuffle partitions (default: task slots)
     extra_conf: dict = field(default_factory=dict)
+
+
+# HotSpot's four tier-4 (C2) compile thresholds, each 5x its default
+# (see JIT above). Not in extraJavaOptions: a caller's value for that
+# conf (perfbench sets one) would replace them, where set beside this
+# conf it lands after them on the command line and its flags win.
+JIT_OPTIONS = ("-XX:Tier4InvocationThreshold=25000 "
+               "-XX:Tier4MinInvocationThreshold=3000 "
+               "-XX:Tier4CompileThreshold=75000 "
+               "-XX:Tier4BackEdgeThreshold=200000")
 
 
 def _cpus() -> int:
@@ -125,6 +174,7 @@ def get_session(config: EngineConfig | None = None) -> SparkSession:
         SparkSession.builder.appName(cfg.app_name)
         .master(master)
         .config("spark.driver.memory", driver_mem)
+        .config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.sql.shuffle.partitions", str(shuffle_parts))
         .config("spark.sql.adaptive.enabled", "true")

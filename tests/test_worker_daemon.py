@@ -1,7 +1,7 @@
-"""The Python process model: `get_session`'s workers fork from the
-package's preloaded, frozen daemon (`worker_daemon.py`), and forking
-from it is safe although the preload leaves Arrow's allocator thread
-running in the daemon."""
+"""The process model: `get_session`'s workers fork from the package's
+preloaded, frozen daemon (`worker_daemon.py`), and forking from it is
+safe although the preload leaves Arrow's allocator thread running in
+the daemon; the engine JVM runs with the session's JIT options."""
 
 from __future__ import annotations
 
@@ -17,6 +17,41 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 DAEMON = "datastream_processing_demo_spark.worker_daemon"
+
+
+def test_engine_jvm_starts_with_the_jit_options(spark, monkeypatch):
+    from pyspark.sql import SparkSession
+
+    from datastream_processing_demo_spark.session import (
+        JIT_OPTIONS,
+        EngineConfig,
+        get_session,
+    )
+
+    flags = JIT_OPTIONS.split()
+    assert len(flags) == 4
+    args = list(spark.sparkContext._jvm.java.lang.management
+                .ManagementFactory.getRuntimeMXBean().getInputArguments())
+    start = args.index(flags[0])
+    assert args[start:start + len(flags)] == flags, args
+    assert (spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions")
+            == JIT_OPTIONS)
+    # What get_session hands the launcher. Spark itself writes its module
+    # options into extraJavaOptions at startup, so the running conf
+    # cannot show that the program left it unset. The spy returns the
+    # running session untouched: no second JVM starts, and no conf of
+    # the shared session changes.
+    asked = {}
+
+    def spy(builder):
+        asked.update(builder._options)
+        return spark
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", spy)
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF", raising=False)
+    get_session(EngineConfig(app_name="tests"))
+    assert asked["spark.driver.defaultJavaOptions"] == JIT_OPTIONS
+    assert "spark.driver.extraJavaOptions" not in asked
 
 
 def test_workers_fork_from_the_frozen_package_daemon(spark):
